@@ -116,40 +116,93 @@ object Ivm {
     * instance per row, multiset semantics). The maintained view identity:
     * `Q(full) == (Q(base) ∪all inserts) ∖all retracts` — pinned by
     * `DeltaIdentitySpec`.
+    *
+    * Both frames are built LAZILY, on first read: a rung that consumes
+    * only another rung's [[touched]] cover (the group-scoped splice) never
+    * pays for that rung's pins and net aggregate.
     */
-  final case class SignedDelta(inserts: DataFrame, retracts: DataFrame) {
+  final class SignedDelta private[ivm] (
+      pair: () => (DataFrame, DataFrame),
+      cover: () => DataFrame,
+      splice: Option[DataFrame => DataFrame]) {
 
-    /** The blessed application: `(view ∪all inserts) ∖all retracts`, with
-      * BOTH delta frames pinned (eager `localCheckpoint`) first.
-      *
-      * Composing the two lazy frames directly into one query can return
-      * wrong results on Spark 4.1: with `spark.sql.exchange.reuse` (default
-      * on), a query containing several canonically-identical
-      * window-over-semi-join exchange subtrees from the two frames
-      * mis-evaluates one copy (observed concretely: a key-scoped delta's
-      * `inserts ∪ retracts` emitted base rows that net to zero; disabling
-      * exchange reuse fixed it, and the analyzed AND optimized plans were
-      * both correct). Checkpointing cuts the shared plan shapes out of the
-      * composed query — and matches production behavior, where a sink
-      * applies materialized deltas as upsert + delete anyway. The deltas
-      * are small by design (that is the point of incremental maintenance),
-      * so the materialization cost is the delta's own size.
+    private lazy val frames = pair()
+
+    def inserts: DataFrame = frames._1
+
+    def retracts: DataFrame = frames._2
+
+    /** A δ-sized COVER of the change: a frame over a subset of the output
+      * columns whose rows include every inserted or retracted row's
+      * values on those columns (more rows are allowed — a cover may
+      * over-approximate). It is read without netting, so it never needs
+      * `inserts`/`retracts` built; by default it is their union.
       */
-    def applyTo(view: DataFrame): DataFrame = {
-      // exceptAll matches columns by POSITION: re-project both frames to
-      // the view's column order first (rungs built over using-column
-      // joins emit key-first order, which need not match the view's)
-      val cols = view.columns.toSeq
-        .map(org.apache.spark.sql.functions.col)
-      // LAZY checkpoint (guide §2.4/§5 — fewer driver barriers): the plan
-      // is cut to a LogicalRDD leaf at construction exactly as before
-      // (which is what defuses the exchange-reuse hazard documented
-      // above), but materialization happens inside the first consuming
-      // job instead of one standalone barrier job per pin
-      graft.engine.Labeled.job(view.sparkSession, "ivm:applyTo-pin") {
-        view.unionByName(inserts.localCheckpoint(false).select(cols: _*))
-          .exceptAll(retracts.localCheckpoint(false).select(cols: _*))
-      }
+    private[ivm] lazy val touched: DataFrame = cover()
+
+    /** The blessed application. Two forms:
+      *
+      * KEY-SCOPED SPLICE (the group-scoped rung): one query
+      * `view ▷ touched ∪all Q(child ⋉ touched)` ([[Splice]]) — the
+      * stored view supplies the untouched groups, nothing is netted or
+      * pinned.
+      *
+      * PAIR: `(view ∪all inserts) ∖all retracts`, with BOTH delta frames
+      * cut to checkpoint leaves first. Composing the two lazy frames
+      * directly into one query can return wrong results on Spark 4.1:
+      * with `spark.sql.exchange.reuse` (default on), a query containing
+      * several canonically-identical window-over-semi-join exchange
+      * subtrees from the two frames mis-evaluates one copy (observed
+      * concretely: a key-scoped delta's `inserts ∪ retracts` emitted base
+      * rows that net to zero; disabling exchange reuse fixed it, and the
+      * analyzed AND optimized plans were both correct). Checkpointing
+      * cuts the shared plan shapes out of the composed query — and
+      * matches production behavior, where a sink applies materialized
+      * deltas as upsert + delete anyway. The deltas are small by design
+      * (that is the point of incremental maintenance), so the
+      * materialization cost is the delta's own size.
+      */
+    def applyTo(view: DataFrame): DataFrame = splice match {
+      case Some(f) => f(view)
+      case None =>
+        // exceptAll matches columns by POSITION: re-project both frames
+        // to the view's column order first (rungs built over
+        // using-column joins emit key-first order, which need not match
+        // the view's)
+        val cols = view.columns.toSeq
+          .map(org.apache.spark.sql.functions.col)
+        // `localCheckpoint(false)` cuts each plan to a LogicalRDD leaf at
+        // construction (which is what defuses the exchange-reuse hazard
+        // above) and defers only the FINAL stage to the first consuming
+        // job: under AQE every shuffle and broadcast stage of the pinned
+        // plan still runs right here, as its own job
+        graft.engine.Labeled.job(view.sparkSession, "ivm:applyTo-pin") {
+          view.unionByName(inserts.localCheckpoint(false).select(cols: _*))
+            .exceptAll(retracts.localCheckpoint(false).select(cols: _*))
+        }
+    }
+
+    /** Whether `applyTo` splices (the group-scoped rung) or nets a pair. */
+    private[ivm] def spliced: Boolean = splice.isDefined
+
+    override def toString: String =
+      s"SignedDelta(${if (spliced) "splice" else "pair"})"
+  }
+
+  object SignedDelta {
+    def apply(inserts: DataFrame, retracts: DataFrame): SignedDelta =
+      new SignedDelta(() => (inserts, retracts),
+        () => inserts.unionByName(retracts), None)
+
+    /** A rung's delta built on first read. `cover` (also evaluated on
+      * first read) is a cheaper [[SignedDelta.touched]] than the built
+      * delta's own, when the rung knows one.
+      */
+    private[ivm] def deferred(build: => SignedDelta)(
+        cover: => Option[DataFrame]): SignedDelta = {
+      lazy val sd = build
+      new SignedDelta(() => (sd.inserts, sd.retracts),
+        () => cover.getOrElse(sd.touched), None)
     }
   }
 
@@ -170,7 +223,7 @@ object Ivm {
   /** `df` with every ExprId re-minted tree-order (see [[signed]]'s doc for
     * why internally repeated ids are a composition hazard).
     */
-  private def reMint(df: DataFrame): DataFrame =
+  private[ivm] def reMint(df: DataFrame): DataFrame =
     GraftSql.ofRows(df.sparkSession,
       PosDeltaRule.freshInstance(GraftSql.analyzed(df)))
 
@@ -190,12 +243,15 @@ object Ivm {
     * keys) approach corpus size — there the pin trades memory for the
     * guaranteed-once execution, and the rung itself is the wrong choice
     * anyway (differencing wins when the delta spans most keys, which is
-    * why maintainAuto keeps both). Note also that pinning makes the
-    * rung-building APIs (deltaKeyScoped/maintainAuto) run cluster jobs
-    * at CONSTRUCTION time, not first consumption. Callers can disable
-    * via `spark.graft.ivm.pinSignedNet=false` — tests do, to audit the
-    * full LAZY maintenance plan (pinning would execute the interesting
-    * subtrees at construction time, leaving only RDD scans to inspect).
+    * why maintainAuto keeps both). Note also that a pin runs cluster
+    * jobs where it is TAKEN, not where its frame is consumed: the
+    * grouped top-k and two-level rungs pin while maintainAuto builds
+    * them, and every [[SignedDelta.deferred]] rung (signedNet, deltaAgg,
+    * agg-join) pins when `inserts`/`retracts` are first read. Callers
+    * can disable via `spark.graft.ivm.pinSignedNet=false` — tests do, to
+    * audit the full LAZY maintenance plan (pinning would execute the
+    * interesting subtrees before the plan is inspected, leaving only RDD
+    * scans to inspect).
     */
   private def pinSmall(df: DataFrame): DataFrame =
     if (df.sparkSession.conf
@@ -203,12 +259,13 @@ object Ivm {
       // constraint normalization: a raw checkpoint leaf re-minted by
       // [[reMint]] can carry STALE constraint ExprIds into a Union and
       // blow up its constraint rewrite (see GraftSql.normalizeRddConstraints).
-      // LAZY checkpoint (guide §2.4/§5): same LogicalRDD leaf (the
-      // guaranteed-once execution and plan-cut are unchanged — the RDD is
-      // computed once and cached at first use), but without one standalone
-      // barrier job per pin: the group-scoped/two-level rungs ran 20–30
-      // sequential eager-pin micro-jobs per cycle, ~2.5 s of delta_minmax's
-      // 4.0 s warm pass in the r18 profile, pure job-launch fixed cost
+      // `localCheckpoint(false)`: the same LogicalRDD leaf as an eager
+      // pin (guaranteed-once execution, plan cut), but only the FINAL
+      // stage is deferred to the first consuming job. Under AQE every
+      // shuffle and broadcast stage of the pinned plan still runs here,
+      // one job each (pinned by a DeltaIdentitySpec job-count test), so a
+      // pin over an exchange costs jobs at construction either way; what
+      // the lazy form saves is the final-stage barrier job per pin
       graft.engine.Labeled.job(df.sparkSession, "ivm:pin") {
         GraftSql.normalizeRddConstraints(df.localCheckpoint(false))
       }
@@ -510,21 +567,37 @@ object Ivm {
     * must surface in the select list to key the lookup.
     */
   def deltaAgg(view: DataFrame, q: Dataset[_]): SignedDelta = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
     import org.apache.spark.sql.functions.{broadcast, col}
     val ad0 = IvmAgg.deltaPartial(q)
-    // the δ partial feeds both the affected-key probe and the merge; the
-    // affected view feeds both signed frames — pin each once
-    val ad = ad0.copy(partial = pinSmall(ad0.partial))
-    val affected = pinSmall(
-      if (ad.keys.isEmpty) view // global aggregate: the single row
-      else {
-        val affKeys = reMint(ad.partial.select(ad.keys.map(k =>
-          col(k).as(s"__aff_$k")): _*).distinct())
-        val cond = ad.keys.map(k => col(k) <=> col(s"__aff_$k"))
-          .reduce(_ && _)
-        view.join(broadcast(affKeys), cond, "left_semi")
-      })
-    signedNet(IvmAgg.merge(affected, ad), reMint(affected))
+    SignedDelta.deferred {
+      // the δ partial feeds both the affected-key probe and the merge;
+      // the affected view feeds both signed frames — pin each once
+      val ad = ad0.copy(partial = pinSmall(ad0.partial))
+      val affected = pinSmall(
+        if (ad.keys.isEmpty) view // global aggregate: the single row
+        else {
+          val affKeys = reMint(ad.partial.select(ad.keys.map(k =>
+            col(k).as(s"__aff_$k")): _*).distinct())
+          val cond = ad.keys.map(k => col(k) <=> col(s"__aff_$k"))
+            .reduce(_ && _)
+          view.join(broadcast(affKeys), cond, "left_semi")
+        })
+      signedNet(IvmAgg.merge(affected, ad), reMint(affected))
+    } {
+      // only groups with δ rows change: the δ rows' group keys cover both
+      // frames without the view probe, the merge, the net — or the
+      // partial's own aggregation (a shuffle)
+      GraftSql.analyzed(q) match {
+        case Aggregate(_, aggExprs, child, _) if ad0.keys.nonEmpty =>
+          val keyOuts = ad0.keys.flatMap(k => aggExprs.find(_.name == k))
+          if (keyOuts.size != ad0.keys.size) None
+          else try Some(delta(GraftSql.ofRows(q.sparkSession,
+            Project(keyOuts, child))))
+          catch { case _: UnsupportedOperationException => None }
+        case _ => None
+      }
+    }
   }
 
   /** Key-scoped differencing — the rung between the signed deltas and full
@@ -586,7 +659,8 @@ object Ivm {
         .select(cols.map(F.col): _*)
     val pinOn = plus.sparkSession.conf
       .get("spark.graft.ivm.pinSignedNet", "true").toBoolean
-    if (pinOn) {
+    // built on first read; the un-netted pair already covers the change
+    SignedDelta.deferred(if (pinOn) {
       // ONE net aggregation for both directions (guide §2.4): the net
       // frame is pinned to a LogicalRDD leaf, so inserts (`net > 0`) and
       // retracts (`net < 0`, replicated −net times) are two filters over
@@ -623,7 +697,7 @@ object Ivm {
           .filter(F.col("__graft_net") > 0)
       signed(replicate(net(plus, minus), F.col("__graft_net")),
         replicate(net(minus, plus), F.col("__graft_net")))
-    }
+    })(Some(plus.unionByName(minus)))
   }
 
   private def requireKeyDecomposable(
@@ -982,31 +1056,31 @@ object Ivm {
     * the view no longer has), avg, DISTINCT, FILTER clauses — over a
     * child that maintains through any signed rung. Where
     * [[aggOverSignedAuto]] must honestly refuse, this rung applies the
-    * [[keyScopedSigned]] restriction idea AT THE GROUP LEVEL:
+    * [[keyScopedSigned]] restriction idea AT THE GROUP LEVEL, as a
+    * [[Splice]]:
     *
-    *   touched  = group keys present in the child's insert/retract frames
-    *   retracts = stored view ⋉ touched    (broadcast semi probe)
-    *   inserts  = γ( child' ⋉ touched )    (recompute ONLY touched groups)
+    *   touched = group keys of the child's change cover
+    *             ([[SignedDelta.touched]] — δ-sized, never netted)
+    *   view′   = view ▷ touched  ∪all  γ( child ⋉ touched )
     *
-    * then net the pair, so value-stable groups vanish from the delta.
     * Recompute is exact for ANY deterministic aggregate — no per-function
     * algebra, which is exactly why it sits BELOW the subtractable rung
     * (cheap partials win when they apply) and below scan-level key
     * scoping (restriction at the parquet scan prunes more than
-    * restriction above the child). At 100 TB the semi joins broadcast the
-    * |touched-groups|-sized key frame; only touched groups' rows flow
-    * through the aggregate exchange, and the view is probed, never
-    * re-aggregated. (The child recompute under the restriction reads the
-    * child's inputs — in production the child of a second-level aggregate
-    * is itself a materialized view, making that read |touched|-sized
-    * too.)
+    * restriction above the child). `applyTo` is that one query: the
+    * stored view supplies every untouched group, and no net aggregate or
+    * pin runs. `inserts`/`retracts` (read by oracles and tests) are the
+    * same restriction netted on first read, with a base recompute
+    * standing in for the stored view. (The child recompute under the
+    * restriction reads the child's inputs — in production the child of a
+    * second-level aggregate is itself a materialized view, making that
+    * read |touched|-sized too.)
     */
   private def aggGroupScopedAuto(df: Dataset[_]): Option[SignedDelta] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualNullSafe, SubqueryExpression, Expression => CExpr}
-    import org.apache.spark.sql.catalyst.plans.LeftSemi
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, HintInfo, Join, JoinHint, ResolvedHint}
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, SubqueryExpression, Expression => CExpr}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.functions.col
 
     val spark = df.sparkSession
     def strip(e: CExpr): Column = GraftSql.column(e.transform {
@@ -1023,7 +1097,7 @@ object Ivm {
         if (!(groupExprs ++ aggExprs).forall(e => e.deterministic &&
             !e.exists(_.isInstanceOf[SubqueryExpression]))) return None
         // each grouping expression must surface as a named output: the
-        // touched-key frame, the view probe, and the net key by NAME
+        // touched-key frame and the view restriction key by NAME
         val keyNames: Seq[String] = groupExprs.map {
           case a: Attribute => aggExprs.collectFirst {
             case o: Attribute if o.exprId == a.exprId => o.name
@@ -1054,42 +1128,39 @@ object Ivm {
                 })
           }).getOrElse(return None)
 
-        // δ-touched groups: key values present in either signed frame —
-        // |touched|-sized by construction, feeds three probes: pin once
-        val keyCols = groupExprs.zip(keyNames).map { case (e, n) =>
-          strip(e).as(n)
+        // the grouping expressions over the child (in keyNames order)
+        val childKeys = groupExprs.map(e => strip(e match {
+          case al: Alias => al.child
+          case x => x
+        }))
+        // δ-touched groups: the grouping expressions over the child's
+        // change cover. A cover lacking a referenced column falls back to
+        // the netted frames, which carry every column.
+        val refs = groupExprs.flatMap(_.references.map(_.name)).toSet
+        lazy val touched: DataFrame = {
+          val cover = Some(childSd.touched)
+            .filter(c => refs.subsetOf(c.columns.toSet))
+            .getOrElse(childSd.inserts.unionByName(childSd.retracts))
+          cover.select(childKeys.zip(keyNames).map { case (k, n) =>
+            k.as(n) }: _*)
         }
-        val touched = pinSmall(
-          childSd.inserts.select(keyCols: _*)
-            .unionByName(childSd.retracts.select(keyCols: _*))
-            .distinct())
-        val affOf = () => reMint(touched.select(keyNames.map(k =>
-          col(k).as(s"__aff_$k")): _*))
-
-        // insert side: the aggregate recomputed over ONLY the touched
-        // groups' child rows. The broadcast semi join grafts UNDER the
-        // Aggregate node — a LEFT SEMI preserves the child's output
-        // attributes exactly, so the grouping/aggregate expressions
-        // rebind unchanged (the keyScopedSigned graft, one level up).
-        // Null-safe equality: a NULL group key is a real group.
-        val affPlan = ResolvedHint(
-          PosDeltaRule.freshInstance(GraftSql.analyzed(affOf())),
-          HintInfo(strategy = Some(BROADCAST)))
-        val cond = groupExprs.zip(keyNames).map { case (e, n) =>
-          val ge = e match { case al: Alias => al.child; case x => x }
-          EqualNullSafe(ge,
-            affPlan.output.find(_.name == s"__aff_$n").get): CExpr
-        }.reduce(And(_, _))
-        val inserts = GraftSql.ofRows(spark, agg.copy(child =
-          Join(child, affPlan, LeftSemi, Some(cond), JoinHint.NONE)))
-
-        // retract side: the stored view probed by the touched keys (base
-        // recompute stands in for the stored view, as in deltaAgg)
-        val vCond = keyNames.map(k => col(k) <=> col(s"__aff_$k"))
-          .reduce(_ && _)
-        val retracts = baseOf(df).join(broadcast(affOf()), vCond, "left_semi")
-        try Some(signedNet(inserts, retracts))
-        catch { case _: UnsupportedOperationException => None }
+        // the aggregate re-rooted over a restricted child: Filter and
+        // LEFT SEMI both keep the child's output attributes, so the
+        // grouping/aggregate expressions rebind unchanged
+        val recompute = (restricted: DataFrame) => GraftSql.ofRows(spark,
+          agg.copy(child = GraftSql.analyzed(restricted)))
+        lazy val resolved = Splice.resolve(touched)
+        val splice = (view: DataFrame) =>
+          Splice(view, keyNames, resolved, childDf, childKeys, recompute)
+        val pair = () => {
+          // base recompute stands in for the stored view
+          val sd = signedNet(
+            recompute(resolved.keep(childDf, childKeys)),
+            resolved.keep(baseOf(df), keyNames.map(col)))
+          (sd.inserts, sd.retracts)
+        }
+        // a parent rung scopes by this rung's touched groups
+        Some(new SignedDelta(pair, () => touched, Some(splice)))
       case _ => None
     }
   }
@@ -1164,11 +1235,27 @@ object Ivm {
     }
   }
 
+  /** Frames unioned over the columns they all share (None when they
+    * share none) — how change covers with different column sets combine:
+    * a row of any input still appears, projected to the common columns.
+    */
+  private def unionOnCommon(frames: Seq[DataFrame]): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    val common = frames.map(_.columns.toSeq)
+      .reduce((a, b) => a.filter(b.contains))
+    if (common.isEmpty) None
+    else Some(frames.map(_.select(common.map(col): _*))
+      .reduce(_ unionByName _))
+  }
+
   private def applyPost(sd: SignedDelta,
       post: List[DataFrame => DataFrame]): SignedDelta =
-    SignedDelta(
-      post.foldLeft(sd.inserts)((d, f) => f(d)),
-      post.foldLeft(sd.retracts)((d, f) => f(d)))
+    if (post.isEmpty) sd
+    else {
+      // built lazily; the cover is re-derived from the transformed pair
+      def f(d: DataFrame) = post.foldLeft(d)((acc, g) => g(acc))
+      SignedDelta.deferred(SignedDelta(f(sd.inserts), f(sd.retracts)))(None)
+    }
 
   private def aggJoinAuto(df: Dataset[_]): Option[SignedDelta] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -1239,33 +1326,55 @@ object Ivm {
               val oCoreDf = GraftSql.ofRows(spark, oAgg)
               Signed(applyPost(deltaAgg(baseOf(oCoreDf), oCoreDf), oFs))
           }
-        val inserts0 = sd.inserts.join(oBase, byName, "inner")
-        val retracts0 = sd.retracts.join(reMint(oBase), byName, "inner")
         // Δ(A⋈B) = δA⋈B + A'⋈δB  (A' = the merged full agg view): with a
         // signed δB = Ib − Rb the second term splits by sign, so Rb rows
         // retract their A'-joined tuples — exactly the agg⋈agg algebra
-        oStep match {
-          case Static =>
-            Some(signed(inserts0.select(outOrder: _*),
-              retracts0.select(outOrder: _*)))
-          case InsertOnly(rows) =>
-            // arms are disjoint by construction (I vs R groups net inside
-            // deltaAgg; δB rows exist in no base-joined arm) — no netting
-            Some(signed(
-              inserts0.unionByName(aFull.join(rows, byName, "inner"))
-                .select(outOrder: _*),
-              retracts0.select(outOrder: _*)))
-          case Signed(osd) =>
-            // a key changed on BOTH sides emits cancelling pairs across
-            // arms (Ia⋈B also appears as A'⋈Rb): net the final pair so
-            // the delta is the minimal signed difference
-            Some(signedNet(
-              inserts0.unionByName(aFull.join(osd.inserts, byName, "inner"))
-                .select(outOrder: _*),
-              retracts0.unionByName(
-                reMint(aFull).join(osd.retracts, byName, "inner"))
-                .select(outOrder: _*)))
+        def build: SignedDelta = {
+          val inserts0 = sd.inserts.join(oBase, byName, "inner")
+          val retracts0 = sd.retracts.join(reMint(oBase), byName, "inner")
+          oStep match {
+            case Static =>
+              signed(inserts0.select(outOrder: _*),
+                retracts0.select(outOrder: _*))
+            case InsertOnly(rows) =>
+              // arms are disjoint by construction (I vs R groups net
+              // inside deltaAgg; δB rows exist in no base-joined arm) —
+              // no netting
+              signed(
+                inserts0.unionByName(aFull.join(rows, byName, "inner"))
+                  .select(outOrder: _*),
+                retracts0.select(outOrder: _*))
+            case Signed(osd) =>
+              // a key changed on BOTH sides emits cancelling pairs across
+              // arms (Ia⋈B also appears as A'⋈Rb): net the final pair so
+              // the delta is the minimal signed difference
+              signedNet(
+                inserts0.unionByName(aFull.join(osd.inserts, byName, "inner"))
+                  .select(outOrder: _*),
+                retracts0.unionByName(
+                  reMint(aFull).join(osd.retracts, byName, "inner"))
+                  .select(outOrder: _*))
+          }
         }
+        // the change cover, from δ-sized frames only: the aggregate side's
+        // cover joined to the other side's base (the δA⋈B arms), plus the
+        // other side's own change on its columns (the A'⋈δB arms — A'
+        // itself is never read). None when the join needs columns the
+        // aggregate side's cover lacks.
+        def cover: Option[DataFrame] = {
+          val aCover = sd.touched
+          val refs = cond.references.map(_.name).toSet
+          if (!refs.subsetOf((aCover.columns ++ oNames).toSet)) None
+          else {
+            val joined = aCover.join(reMint(oBase), byName, "inner")
+            unionOnCommon(joined +: (oStep match {
+              case Static => Nil
+              case InsertOnly(rows) => Seq(rows)
+              case Signed(osd) => Seq(osd.touched)
+            }))
+          }
+        }
+        Some(SignedDelta.deferred(build)(cover))
       } catch { case _: UnsupportedOperationException => None }
     }
 

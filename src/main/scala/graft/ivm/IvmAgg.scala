@@ -33,6 +33,11 @@ import org.apache.spark.sql.graft.GraftSql
   */
 object IvmAgg {
 
+  /** Test-only conf: check [[alignByKeys]]'s one-row-per-key
+    * precondition eagerly (one extra job per side per call).
+    */
+  private[ivm] val CheckAlignKeys = "spark.graft.test.checkAlignKeys"
+
   /** One mergeable output column of a grouped aggregate. */
   final case class MergeSpec(name: String, combine: (Column, Column) => Column)
 
@@ -209,12 +214,29 @@ object IvmAgg {
     * the join's `<=>` key equality (SQL GROUP BY treats NULL as a value).
     * Output: keys, then left's value columns as `__graft_l_<c>`, right's
     * as `__graft_r_<c>` — callers select their own combine expressions.
+    *
+    * PRECONDITION: at most one row per key per side. A side with a
+    * duplicate key is silently collapsed to one of its values (which
+    * one is unspecified). With the test-only conf
+    * `spark.graft.test.checkAlignKeys=true` both sides are checked
+    * eagerly and a duplicate fails with IllegalStateException.
     */
   private[ivm] def alignByKeys(l: DataFrame, r: DataFrame,
       keys: Seq[String]): DataFrame = {
     val lv = l.columns.filterNot(keys.contains).toSeq
     val rv = r.columns.filterNot(keys.contains).toSeq
     require(lv.nonEmpty || rv.nonEmpty, "alignByKeys: no value columns")
+    if (l.sparkSession.conf.get(CheckAlignKeys, "false").toBoolean)
+      for ((name, df) <- Seq("left" -> l, "right" -> r)) {
+        val counts = if (keys.isEmpty) df.groupBy().count()
+          else df.groupBy(keys.map(col): _*).count()
+        counts.filter(col("count") > 1).limit(1).collect().foreach { row =>
+          throw new IllegalStateException(
+            s"alignByKeys: the $name side holds ${row.getAs[Long]("count")} " +
+              s"rows for key (${keys.indices.map(row.get).mkString(", ")}); " +
+              "at most one row per key per side is required")
+        }
+      }
     def side(df: DataFrame, own: Seq[String], ownP: String,
         other: Seq[String], otherDf: DataFrame, otherP: String) =
       df.select(keys.map(col) ++
@@ -296,6 +318,10 @@ object IvmAgg {
     * one group (SQL GROUP BY semantics). Computed through
     * [[alignByKeys]]'s union + single hash aggregate instead of a
     * full-outer join — same rows, one exchange instead of two.
+    *
+    * Requires AT MOST ONE ROW PER GROUP KEY in `view` (and in the
+    * partial, which is grouped by construction): a view holding two rows
+    * for one key is merged as if it held one of them.
     */
   def merge(view: DataFrame, delta: AggDelta): DataFrame = {
     val keys = delta.keys
@@ -309,6 +335,7 @@ object IvmAgg {
 
   /** One-shot convenience: the maintained result of an aggregate query
     * given its materialized base state — `merge(baseView, deltaPartial(q))`.
+    * Same precondition as [[merge]]: at most one `baseView` row per key.
     */
   def maintain(baseView: DataFrame, q: Dataset[_]): DataFrame =
     merge(baseView, deltaPartial(q))

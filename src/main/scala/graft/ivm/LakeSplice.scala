@@ -1,99 +1,35 @@
 package graft.ivm
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.col
 
-/** The GROUP-SCOPED SPLICE shared by the lakehouse maintenance seams
-  * ([[DeltaLakeSnapshots.maintainAgg]], [[IcebergSnapshots.maintainAgg]])
-  * — one copy of the subtle parts (null-safe group equality, broadcast
-  * probes, δ-sized pinning) instead of one per format:
+/** The lakehouse maintenance seams' splice
+  * ([[DeltaLakeSnapshots.maintainAgg]], [[IcebergSnapshots.maintainAgg]]):
+  * one call into the shared [[Splice]] core instead of one copy per
+  * format.
   *
-  *   touched  = distinct `keys` of (inserts ∪ retracts)   — δ-sized
-  *   view′    = view ∖ touched  ∪  agg(snapshot ⋉ touched)
+  *   touched  = `keys` of (inserts ∪ retracts)   — δ-sized
+  *   view′    = view ▷ touched  ∪all  agg(snapshot ⋉ touched)
   *
-  * Exact for ANY deterministic aggregate (min/max/count-distinct
-  * included, which subtraction-merging can't retract). The returned
-  * frame is EAGER (`localCheckpoint`): callers advance their cut only
-  * after it materializes, so a failed cycle never moves the cut past
-  * changes it hasn't applied — and production sinks materialize the new
-  * view state anyway.
-  *
-  * Scale shape of the recompute arm: a small single-key touched set
-  * (bounded by the window's churn — the normal case) is INLINED as a
-  * literal predicate on the snapshot, which the log-backed index prunes
-  * FILES with (partition filter when the key is the partition column,
-  * stats skip otherwise) — deterministic, not dependent on runtime DPP
-  * firing under a broadcast semi join. Large or composite touched sets
-  * fall back to the broadcast semi join.
+  * A small single-key touched set (bounded by the window's churn — the
+  * normal case) reaches the log-backed snapshot as a literal IN, which
+  * prunes FILES (partition filter when the key is the partition column,
+  * stats skip otherwise). The returned frame is EAGER (`localCheckpoint`):
+  * callers advance their cut only after it materializes, so a failed
+  * cycle never moves the cut past changes it hasn't applied — and
+  * production sinks materialize the new view state anyway.
   */
 private[ivm] object LakeSplice {
-
-  /** Above this many touched single-key values, restrict the recompute
-    * arm with a broadcast semi join instead of a literal IN — the
-    * driver-side collect is bounded either way.
-    */
-  private val InlineCap = 10000
 
   def maintainAgg(view: DataFrame, keys: Seq[String],
       agg: DataFrame => DataFrame, inserts: DataFrame,
       retracts: DataFrame, snapshot: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.lit
     val kc = keys.map(col)
-    // pin: δ-sized by construction, probed twice (anti + semi)
-    // lazy: materialized by its first consumer (the inline-collect or the
-    // broadcast build) instead of a standalone barrier job. The VIEW pin
-    // below stays EAGER — cut-advance safety rides on it materializing
-    // before the caller moves its cut.
-    val touched = graft.engine.Labeled.job(view.sparkSession,
-      "splice:touched-pin") {
-      inserts.select(kc: _*)
-        .unionByName(retracts.select(kc: _*))
-        .distinct().localCheckpoint(false)
-    }
-    // null-safe key equality: a NULL group value is a real group (SQL
-    // GROUP BY semantics — and partition values can be null)
-    val tRen = touched.select(
-      keys.map(k => col(k).as(s"__touched_$k")): _*)
-    val cond = keys.map(k => col(k) <=> col(s"__touched_$k"))
-      .reduce(_ && _)
-    // recompute arm: a SMALL single-key touched set (the normal case —
-    // bounded by the window's churn) inlines as a literal predicate, so
-    // it reaches the log-backed scan as a real partition/pushed filter
-    // and prunes FILES deterministically; a broadcast semi join only
-    // restricts rows after the scan (runtime DPP may or may not fire).
-    // Beyond the cap, or for composite keys, fall back to the semi join.
-    val inlinableKeyType = keys.size == 1 &&
-      (touched.schema.head.dataType match {
-        // a struct/array/map grouping value collects as a Row/Seq that
-        // `lit()`/`isin` cannot re-literalize — those fall to the semi
-        // join, which handles any groupable type
-        case _: org.apache.spark.sql.types.StructType |
-             _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.MapType => false
-        case _ => true
-      })
-    val restricted =
-      if (inlinableKeyType) {
-        val vals = graft.engine.Labeled.job(view.sparkSession,
-          "splice:touched-collect") {
-          touched.limit(InlineCap + 1).collect().map(_.get(0))
-        }
-        if (vals.length <= InlineCap) {
-          val k = col(keys.head)
-          val nonNull = vals.filter(_ != null)
-          val pred =
-            if (nonNull.isEmpty) k.isNull
-            else if (nonNull.length == vals.length)
-              k.isin(nonNull.toIndexedSeq: _*)
-            else k.isNull || k.isin(nonNull.toIndexedSeq: _*)
-          Some(snapshot.filter(if (vals.isEmpty) lit(false) else pred))
-        } else None
-      } else None
-    val repaired = agg(restricted.getOrElse(
-      snapshot.join(broadcast(tRen), cond, "left_semi")))
-    val kept = view.join(broadcast(tRen), cond, "left_anti")
+    val touched = Splice.resolve(
+      inserts.select(kc: _*).unionByName(retracts.select(kc: _*)))
+    val spliced = Splice(view, keys, touched, snapshot, kc, agg)
     graft.engine.Labeled.job(view.sparkSession, "splice:view-pin") {
-      kept.unionByName(repaired).localCheckpoint()
+      spliced.localCheckpoint()
     }
   }
 }

@@ -352,17 +352,16 @@ object Dedup {
     // round 0 fused into initialization: label = min(self, direct
     // neighbors) — one aggregation replaces the distinct AND the first
     // propagation round (plus its convergence check).
-    // Each round's frame is materialized by an EAGER localCheckpoint, not
-    // persist: the label frame is referenced THREE times per round (self,
-    // neighbor-min, pointer lookup), so a lazy cached lineage would grow
-    // 3^rounds plan nodes — checkpointing truncates to a LogicalRDD and
-    // keeps the per-round plan (and codegen time) constant. Superseded
-    // rounds' blocks are freed by the ContextCleaner once unreferenced;
-    // the returned frame is re-persisted explicitly so the caller's
-    // unpersist has its usual effect.
-    // lazy checkpoints throughout the loop: each round's convergence
-    // check (a full-frame aggregate) is the materializing action, so the
-    // eager pin's standalone job per round was a pure extra barrier
+    // Each round's frame is a localCheckpoint, not persist: the label
+    // frame is referenced THREE times per round (self, neighbor-min,
+    // pointer lookup), so a lazy cached lineage would grow 3^rounds plan
+    // nodes — checkpointing truncates to a LogicalRDD and keeps the
+    // per-round plan (and codegen time) constant. The checkpoints are
+    // `localCheckpoint(false)`: each round's shuffle stages run where the
+    // checkpoint is taken, and its final stage runs inside the round's
+    // convergence check (a full-frame aggregate) — an eager pin would add
+    // one more standalone final-stage job per round. Superseded rounds'
+    // blocks are freed at once (unpinNow below).
     var labels = edges.groupBy(col("a"))
       .agg(least(col("a"), min(col("b"))).as("label"))
       .select(col("a").as("id"), col("label"))
@@ -428,9 +427,10 @@ object Dedup {
         s"connectedComponents did not converge in $maxIter rounds — the " +
           "pair graph has a longer chain than expected; raise maxIter")
     }
-    // the final round's frame is ALREADY materialized (eager
-    // localCheckpoint) — returning it directly avoids a second cached
-    // copy. (The previous extra persist() was a per-execution block leak
+    // the final round's frame is ALREADY materialized: its lazy
+    // `localCheckpoint(false)` ran its shuffle stages when it was taken
+    // and its final stage inside the convergence check, which reads every
+    // partition — returning it directly avoids a second cached copy. (The previous extra persist() was a per-execution block leak
     // for callers that never unpersist — e.g. the declared query run
     // repeatedly by the bench — and showed up as multi-second run-to-run
     // variance while the ContextCleaner caught up. Checkpoint blocks are

@@ -1474,9 +1474,10 @@ object DeltaLake {
   }
 
   /** Per-file column stats → the protocol's add.stats JSON (numRecords +
-    * min/maxValues over orderable primitive data columns), computed in
-    * ONE job over the given files grouped by the hidden file name — this
-    * is what log-level data skipping reads. Keyed by file NAME.
+    * min/maxValues over orderable primitive data columns), read from the
+    * given files' parquet footers — this is what log-level data skipping
+    * reads. Keyed by each file's ABSOLUTE path (`getAbsolutePath` of the
+    * given path), never by file name.
     */
   private def fileStats(spark: SparkSession, dataSchema: StructType,
       paths: Seq[String]): Map[String, String] = {

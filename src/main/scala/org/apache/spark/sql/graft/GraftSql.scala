@@ -57,6 +57,21 @@ object GraftSql {
   def analyze(spark: SparkSession, plan: LogicalPlan): LogicalPlan =
     spark.sessionState.analyzer.execute(plan)
 
+  /** Synchronously drop a checkpointed frame's cached blocks (guide §5 —
+    * unpersist when done). A localCheckpoint frame's blocks are otherwise
+    * reclaimed only when the ContextCleaner notices the RDD is
+    * garbage-collected, so an iterative loop that supersedes a pinned
+    * frame per round accumulates dead blocks between GCs — measured as
+    * multi-second warm-pass variance on the CC-loop queries. ONLY safe on
+    * frames that are never read again: a truncated checkpoint RDD cannot
+    * recompute evicted blocks.
+    */
+  def unpinNow(df: DataFrame): Unit = analyzed(df) match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      lr.rdd.unpersist(blocking = false); ()
+    case _ => ()
+  }
+
   /** Re-home a checkpoint-produced [[LogicalRDD]]'s constraints onto its
     * own output attributes.
     *
@@ -73,21 +88,6 @@ object GraftSql {
     * foreign ExprIds outright — restores the invariant every other node
     * maintains: constraints ⊆ functions of output.
     */
-  /** Synchronously drop a checkpointed frame's cached blocks (guide §5 —
-    * unpersist when done). A localCheckpoint frame's blocks are otherwise
-    * reclaimed only when the ContextCleaner notices the RDD is
-    * garbage-collected, so an iterative loop that supersedes a pinned
-    * frame per round accumulates dead blocks between GCs — measured as
-    * multi-second warm-pass variance on the CC-loop queries. ONLY safe on
-    * frames that are never read again: a truncated checkpoint RDD cannot
-    * recompute evicted blocks.
-    */
-  def unpinNow(df: DataFrame): Unit = analyzed(df) match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(blocking = false); ()
-    case _ => ()
-  }
-
   def normalizeRddConstraints(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, ExpressionSet}
     import org.apache.spark.sql.execution.LogicalRDD

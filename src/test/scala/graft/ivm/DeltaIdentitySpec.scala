@@ -1116,4 +1116,209 @@ class DeltaIdentitySpec extends AnyFunSuite with SparkFixture {
       case other => fail(s"expected ApplySigned (group-scoped), got $other")
     }
   }
+
+  // ---- group-scoped splice: view ▷ touched ∪all Q(child ⋉ touched) ----
+
+  /** A group-scoped view over an EXCEPT child: `a` is static, every row
+    * of `b` is δ (m >= 100), so the child's signed step retracts exactly
+    * the `a` rows `b` names. The view groups by COMPUTED keys (`k * 10`
+    * as `g`, `upper(k2)` as `g2`), which key-scoping (it scopes by scan
+    * columns) cannot reach. Returns the view query, its signed delta,
+    * and the stored view (the base answer, materialized).
+    */
+  private def spliceCase(tag: String, a: DataFrame, b: DataFrame,
+      keys: Seq[String]): (DataFrame, Ivm.SignedDelta, DataFrame) = {
+    val keyCols = keys.map {
+      case "g" => (col("k") * 10).as("g")
+      case "g2" => upper(col("k2")).as("g2")
+    }
+    a.createOrReplaceTempView(s"gsp_${tag}_a")
+    b.createOrReplaceTempView(s"gsp_${tag}_b")
+    DeltaSources.register(s"gsp_${tag}_a", "v >= 999999") // registered, empty δ
+    DeltaSources.register(s"gsp_${tag}_b", "m >= 100")
+    val cols = a.columns.toSeq.map(col)
+    def q(bRows: DataFrame) = spark.table(s"gsp_${tag}_a")
+      .except(bRows.select(cols: _*))
+      .groupBy(keyCols: _*).agg(max(col("v")).as("mx"))
+    val full = q(spark.table(s"gsp_${tag}_b"))
+    val stored = q(spark.table(s"gsp_${tag}_b").filter(col("m") < 100))
+      .localCheckpoint()
+    Ivm.maintainAuto(full) match {
+      case Ivm.ApplySigned(sd) if sd.spliced => (full, sd, stored)
+      case other => fail(s"expected the group-scoped splice, got $other")
+    }
+  }
+
+  /** Whether the splice restricts by joining the touched set (its
+    * `__touched_<i>` columns) rather than by an inlined IN list.
+    */
+  private def splicesByJoin(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        j.right.output.exists(_.name.startsWith("__touched_"))
+      case _ => false
+    }
+
+  test("splice: a NULL group key is a real group, touched or not") {
+    import spark.implicits._
+    val a = Seq((None, 10L), (None, 7L), (Some(1L), 5L), (Some(1L), 4L),
+      (Some(2L), 3L)).toDF("k", "v")
+    // touched = {NULL}: the NULL group recomputes to its runner-up
+    val (q1, sd1, stored1) = spliceCase("null_hit", a,
+      Seq((None: Option[Long], 10L, 100L)).toDF("k", "v", "m"), Seq("g"))
+    val got1 = sd1.applyTo(stored1)
+    assertMultisetEqual(got1, q1)
+    assert(got1.filter(col("g").isNull).select("mx").as[Long].collect()
+      .toSeq == Seq(7L))
+    // touched = {10}: the untouched NULL group must survive the drop side
+    // (`g IN (10)` is NULL, not false, for a NULL key)
+    val (q2, sd2, stored2) = spliceCase("null_kept", a,
+      Seq((Some(1L), 5L, 100L)).toDF("k", "v", "m"), Seq("g"))
+    val got2 = sd2.applyTo(stored2)
+    assertMultisetEqual(got2, q2)
+    assert(got2.filter(col("g").isNull).count() == 1)
+    assert(!splicesByJoin(got2), "a small single-key set must inline as IN")
+  }
+
+  test("splice: a touched group whose child rows all retract leaves the view") {
+    import spark.implicits._
+    val (q, sd, stored) = spliceCase("gone",
+      Seq((1L, 10L), (2L, 5L), (3L, 4L)).toDF("k", "v"),
+      Seq((1L, 10L, 100L)).toDF("k", "v", "m"), Seq("g"))
+    val got = sd.applyTo(stored)
+    assertMultisetEqual(got, q)
+    assert(got.filter(col("g") === 10L).isEmpty, "group 10 must leave")
+    assert(sd.retracts.as[(Long, Long)].collect().toSet == Set((10L, 10L)))
+    assert(sd.inserts.isEmpty)
+  }
+
+  test("splice: a value-stable touched group is rewritten unchanged") {
+    import spark.implicits._
+    // δ cancels group 10's runner-up: the group is touched, its max stays
+    val (q, sd, stored) = spliceCase("stable",
+      Seq((1L, 10L), (1L, 7L), (2L, 5L)).toDF("k", "v"),
+      Seq((1L, 7L, 100L)).toDF("k", "v", "m"), Seq("g"))
+    assert(sd.touched.select("g").as[Long].collect().toSet == Set(10L))
+    val got = sd.applyTo(stored)
+    assertMultisetEqual(got, q)
+    assertMultisetEqual(got, stored)
+    // the netted pair drops it entirely
+    assert(sd.inserts.isEmpty && sd.retracts.isEmpty)
+  }
+
+  test("splice: composite-key and above-cap touched sets take the join form") {
+    import spark.implicits._
+    val (q1, sd1, stored1) = spliceCase("composite",
+      Seq((1L, "x", 10L), (1L, "x", 7L), (1L, "y", 4L), (2L, "x", 3L),
+        (1L, "X", 2L))
+        .toDF("k", "k2", "v"),
+      Seq((1L, "x", 10L, 100L)).toDF("k", "k2", "v", "m"), Seq("g", "g2"))
+    val got1 = sd1.applyTo(stored1)
+    assert(splicesByJoin(got1), "composite keys must splice by join")
+    assertMultisetEqual(got1, q1)
+    // 10,001 touched single-key groups: one past the inline cap
+    val n = 10001L
+    val a = spark.range(n).select(col("id").as("k"), lit(1L).as("v"))
+      .union(spark.range(n).select(col("id").as("k"), lit(2L).as("v")))
+    val (q2, sd2, stored2) = spliceCase("above_cap", a,
+      spark.range(n).select(col("id").as("k"), lit(2L).as("v"),
+        lit(100L).as("m")), Seq("g"))
+    val got2 = sd2.applyTo(stored2)
+    assert(splicesByJoin(got2), "above the cap the splice must join")
+    assertMultisetEqual(got2, q2)
+    assert(got2.filter(col("mx") =!= 1L).isEmpty)
+  }
+
+  test("splice: a dim-side δ row touches a group the aggregate side does not") {
+    import spark.implicits._
+    // agg ⋈ dim child, both sides registered: δ orders touch customer 1
+    // (nation 10); a δ dim row files customer 2 under nation 30 as well,
+    // so nation 30 gains a group only the dim side's change reaches
+    Seq((1L, 1L, 10L), (2L, 2L, 20L), (3L, 1L, 1000L))
+      .toDF("o_id", "o_cust", "o_amt").createOrReplaceTempView("gsp_dim_o")
+    Seq((1L, 10L, 0L), (2L, 20L, 0L), (2L, 30L, 1L))
+      .toDF("c_key", "c_nation", "c_flag").createOrReplaceTempView("gsp_dim_c")
+    DeltaSources.register("gsp_dim_o", "o_amt >= 1000")
+    DeltaSources.register("gsp_dim_c", "c_flag = 1")
+    def q(o: DataFrame, c: DataFrame) =
+      o.groupBy("o_cust").agg(count(lit(1)).as("cnt"), sum("o_amt").as("amt"))
+        .join(c, col("o_cust") === col("c_key"))
+        .groupBy("c_nation")
+        .agg(max("amt").as("max_amt"), min("cnt").as("min_cnt"))
+    val full = q(spark.table("gsp_dim_o"), spark.table("gsp_dim_c"))
+    val stored = q(spark.table("gsp_dim_o").filter(col("o_amt") < 1000),
+      spark.table("gsp_dim_c").filter(col("c_flag") =!= 1)).localCheckpoint()
+    Ivm.maintainAuto(full) match {
+      case Ivm.ApplySigned(sd) if sd.spliced =>
+        assert(sd.touched.select("c_nation").as[Long].collect().toSet ==
+          Set(10L, 30L))
+        val got = sd.applyTo(stored)
+        assertMultisetEqual(got, full)
+        assert(got.filter(col("c_nation") === 30L).count() == 1)
+      case other => fail(s"expected the group-scoped splice, got $other")
+    }
+  }
+
+  test("splice: applyTo equals the recompute with exchange reuse on and off") {
+    import org.apache.spark.sql.types.DecimalType
+    def q(keys: Seq[String])(o: DataFrame, c: DataFrame) =
+      o.groupBy(col("o_custkey"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("o_totalprice").cast(DecimalType(18, 2))).as("sp"))
+        .join(c.select("c_custkey", "c_nationkey", "c_mktsegment"),
+          col("o_custkey") === col("c_custkey"), "inner")
+        .groupBy(keys.map(col): _*)
+        .agg(max(col("sp")).as("max_spend"),
+          min(col("cnt")).as("min_orders"), count(lit(1)).as("n_cust"))
+    val key = "spark.sql.exchange.reuse"
+    // one key inlines as IN; two keys splice through broadcast joins,
+    // whose two touched-set exchanges are canonically identical
+    for (reuse <- Seq("true", "false");
+         keys <- Seq(Seq("c_nationkey"), Seq("c_nationkey", "c_mktsegment"))) {
+      spark.conf.set(key, reuse)
+      try {
+        val stored = q(keys)(base("orders"), base("customer")).localCheckpoint()
+        Ivm.maintainAuto(q(keys)(t("orders"), t("customer"))) match {
+          case Ivm.ApplySigned(sd) if sd.spliced =>
+            val applied = sd.applyTo(stored)
+            assert(splicesByJoin(applied) == (keys.size > 1))
+            assertMultisetEqual(applied, q(keys)(t("orders"), t("customer")))
+          case other => fail(s"expected the group-scoped splice, got $other")
+        }
+      } finally spark.conf.unset(key)
+    }
+  }
+
+  test("a lazy pin runs its plan's exchange stages when it is taken") {
+    // `localCheckpoint(false)` defers only the FINAL stage: under AQE the
+    // shuffle and broadcast stages below it run at construction, one job
+    // each — a pin over an exchange is never free to build
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobs[T](body: => T): (T, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      sc.addSparkListener(l)
+      try {
+        val r = body
+        org.apache.spark.graft.ListenerBus.drain(sc)
+        (r, n.get)
+      } finally sc.removeSparkListener(l)
+    }
+    val grouped = spark.range(1000)
+      .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("c"))
+    val (pinned, built) = jobs(grouped.localCheckpoint(false))
+    assert(built == 1, s"one exchange: expected 1 job at construction, got $built")
+    val (_, consumed) = jobs(pinned.collect())
+    assert(consumed >= 1, "the final stage runs at first use")
+    // one exchange plus one broadcast: two jobs before the frame is used
+    val joined = grouped.join(broadcast(spark.range(7).toDF("k")), "k")
+    val (_, built2) = jobs(joined.localCheckpoint(false))
+    assert(built2 == 2, s"expected 2 jobs at construction, got $built2")
+  }
 }

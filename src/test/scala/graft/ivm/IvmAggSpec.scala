@@ -206,4 +206,22 @@ class IvmAggSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("no registered delta source"), e.getMessage)
     assert(e.getMessage.contains("IvmAgg.deltaPartial"), e.getMessage)
   }
+
+  test("alignByKeys: the debug check fires on a side with duplicate keys") {
+    import spark.implicits._
+    val one = Seq((1L, 10L), (2L, 20L)).toDF("k", "a")
+    val dup = Seq((1L, 5L), (1L, 6L)).toDF("k", "b")
+    spark.conf.set(IvmAgg.CheckAlignKeys, "true")
+    try {
+      // one row per key on both sides: passes the check
+      assert(IvmAgg.alignByKeys(one, one.withColumnRenamed("a", "b"),
+        Seq("k")).count() == 2)
+      val e = intercept[IllegalStateException](
+        IvmAgg.alignByKeys(one, dup, Seq("k")))
+      assert(e.getMessage.contains("right side holds 2 rows for key (1)"),
+        e.getMessage)
+    } finally spark.conf.unset(IvmAgg.CheckAlignKeys)
+    // the check is off by default: the duplicate collapses silently
+    assert(IvmAgg.alignByKeys(one, dup, Seq("k")).count() == 2)
+  }
 }
