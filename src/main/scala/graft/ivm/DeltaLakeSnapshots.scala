@@ -170,8 +170,8 @@ object DeltaLakeSnapshots {
     * `prep` hook: a deterministic ROW-WISE derivation applied uniformly
     * to the signed frames and the snapshot (row-wise ops commute with
     * the signed pair, so the touched-key set is exact). At 100 TB: `touched` is bounded
-    * by the window's churn and restricts both arms ([[Splice]]: a literal
-    * IN for a small single key, a broadcast join otherwise), so the only
+    * by the window's churn and restricts both arms ([[Splice]]: an IN
+    * set for a small single key, a broadcast join otherwise), so the only
     * base-side read is the recompute arm — snapshot rows of the touched
     * groups only, partition-pruned/stats-skipped when the keys align
     * with the layout (here: keys ARE the partition columns, so the

@@ -99,8 +99,10 @@ object Ivm {
     */
   final case class MergePartial(delta: IvmAgg.AggDelta) extends AutoMaintenance
 
-  /** A signed insert/retract pair for a LEFT OUTER / LEFT ANTI join root:
-    * apply as `view' = (view ∪all inserts) ∖all retracts` (an upsert +
+  /** A signed delta (outer / anti join, EXCEPT, agg-join, top-k,
+    * key-scoped and group-scoped roots): apply with
+    * [[SignedDelta.applyTo]] — a key splice where the rung has a key,
+    * else `view' = (view ∪all inserts) ∖all retracts` (an upsert +
     * delete in production sinks). Incremental: every term keys on the
     * pruned delta partitions, no full recompute.
     */
@@ -117,14 +119,16 @@ object Ivm {
     * `Q(full) == (Q(base) ∪all inserts) ∖all retracts` — pinned by
     * `DeltaIdentitySpec`.
     *
-    * Both frames are built LAZILY, on first read: a rung that consumes
-    * only another rung's [[touched]] cover (the group-scoped splice) never
-    * pays for that rung's pins and net aggregate.
+    * Both frames are built LAZILY, on first read: a view maintained
+    * through [[applyTo]]'s splice, or a parent rung that consumes only
+    * the [[touched]] cover (the group-scoped splice), never pays for the
+    * pair's plans, pins and net aggregate. The oracles and the identity
+    * specs read them.
     */
   final class SignedDelta private[ivm] (
       pair: () => (DataFrame, DataFrame),
       cover: () => DataFrame,
-      splice: Option[DataFrame => DataFrame]) {
+      splice: Option[Splicing]) {
 
     private lazy val frames = pair()
 
@@ -142,13 +146,23 @@ object Ivm {
 
     /** The blessed application. Two forms:
       *
-      * KEY-SCOPED SPLICE (the group-scoped rung): one query
-      * `view ▷ touched ∪all Q(child ⋉ touched)` ([[Splice]]) — the
-      * stored view supplies the untouched groups, nothing is netted or
-      * pinned.
+      * KEY-SCOPED SPLICE — every rung whose view decomposes by a key that
+      * reaches the view by name: the group-scoped rung (its group keys),
+      * the key-scoped rung (its scoping keys, when they surface as the
+      * scans' own columns), the outer and anti join rungs (the first
+      * equi-conjunct's column: the left one for left outer and anti, the
+      * right one for right outer, `coalesce(left, right)` for full
+      * outer), and peeled row-wise tops over them that pass those columns
+      * through. One query, `view ▷ touched ∪all Q(input ⋉ touched)`
+      * ([[Splice]]): the stored view supplies the untouched keys, nothing
+      * is netted or pinned.
       *
-      * PAIR: `(view ∪all inserts) ∖all retracts`, with BOTH delta frames
-      * cut to checkpoint leaves first. Composing the two lazy frames
+      * PAIR — the rungs without such a key (EXCEPT, top-k, the merge-
+      * derived agg-join and two-level rungs, a join condition with no
+      * plain-column equi-conjunct, a peeled top that drops or renames the
+      * key, pairs built with `SignedDelta(inserts, retracts)`):
+      * `(view ∪all inserts) ∖all retracts`, with BOTH delta frames cut to
+      * checkpoint leaves first. Composing the two lazy frames
       * directly into one query can return wrong results on Spark 4.1:
       * with `spark.sql.exchange.reuse` (default on), a query containing
       * several canonically-identical window-over-semi-join exchange
@@ -163,7 +177,7 @@ object Ivm {
       * materialization cost is the delta's own size.
       */
     def applyTo(view: DataFrame): DataFrame = splice match {
-      case Some(f) => f(view)
+      case Some(s) => s(view)
       case None =>
         // exceptAll matches columns by POSITION: re-project both frames
         // to the view's column order first (rungs built over
@@ -182,8 +196,22 @@ object Ivm {
         }
     }
 
-    /** Whether `applyTo` splices (the group-scoped rung) or nets a pair. */
+    /** Whether `applyTo` splices or nets a pair. */
     private[ivm] def spliced: Boolean = splice.isDefined
+
+    /** This delta through a deterministic row-wise `f` (a peeled
+      * Project/Filter top; `keeps` tells which columns it passes through
+      * unchanged under their own names): both frames map, the splice's
+      * recompute maps while `f` keeps every view column the splice key
+      * reads, and the cover stays while `f` keeps its columns.
+      */
+    private[ivm] def map(f: DataFrame => DataFrame,
+        keeps: String => Boolean): SignedDelta =
+      new SignedDelta(() => (f(inserts), f(retracts)),
+        () => if (touched.columns.forall(keeps)) touched
+          else f(inserts).unionByName(f(retracts)),
+        splice.filter(_.reads.forall(keeps))
+          .map(s => s.copy(recompute = t => f(s.recompute(t)))))
 
     override def toString: String =
       s"SignedDelta(${if (spliced) "splice" else "pair"})"
@@ -194,16 +222,41 @@ object Ivm {
       new SignedDelta(() => (inserts, retracts),
         () => inserts.unionByName(retracts), None)
 
-    /** A rung's delta built on first read. `cover` (also evaluated on
-      * first read) is a cheaper [[SignedDelta.touched]] than the built
-      * delta's own, when the rung knows one.
+    /** A rung's delta built on first read, applied through `splicing`
+      * when the rung has one. `cover` (also evaluated on first read) is a
+      * cheaper [[SignedDelta.touched]] than the built delta's own, when
+      * the rung knows one.
       */
     private[ivm] def deferred(build: => SignedDelta)(
-        cover: => Option[DataFrame]): SignedDelta = {
+        cover: => Option[DataFrame],
+        splicing: Option[Splicing] = None): SignedDelta = {
       lazy val sd = build
       new SignedDelta(() => (sd.inserts, sd.retracts),
-        () => cover.getOrElse(sd.touched), None)
+        () => cover.getOrElse(sd.touched), splicing)
     }
+  }
+
+  /** How a rung splices its change into a stored view
+    * ([[SignedDelta.applyTo]]): the view's key expressions and the view
+    * columns they read (a peeled top must pass those through), the
+    * resolved touched-key set (built once, on first use), and the query
+    * over the touched keys' input rows, in the view's columns.
+    */
+  private[ivm] final case class Splicing(
+      reads: Set[String],
+      viewKeys: Seq[Column],
+      touched: () => Splice.Touched,
+      recompute: Splice.Touched => DataFrame) {
+    def apply(view: DataFrame): DataFrame = {
+      val t = touched()
+      Splice(view, viewKeys, t, recompute(t))
+    }
+  }
+
+  /** `f` evaluated once, on the first call. */
+  private def once[T](f: => T): () => T = {
+    lazy val v = f
+    () => v
   }
 
   /** Construct a [[SignedDelta]] with every ExprId in both plans re-minted
@@ -287,19 +340,28 @@ object Ivm {
     * two sides' column names must be disjoint. At scale every term is a
     * keyed join whose δ side reads only the pruned delta partition; the
     * anti/semi pair in `retracts` shares the base-A scan.
+    *
+    * `applyTo` splices on the first equi-conjunct `lk = rk` of `cond`
+    * ([[joinSplicing]]): a view row derives from one left row and the
+    * right rows of ITS key, so `view′ = view ▷ touched ∪all
+    * (A ⋉ touched) ⟕ (B ⋉ touched)` with touched = δA's `lk` ∪ δB's `rk`
+    * — one query, no pins. The pair above is built only when read.
     */
   def deltaLeftJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
-    val rFull = right.toDF()
-    val inserts = delta(left).join(rFull, cond, "left")
-      .unionByName(baseOf(left).join(delta(right), cond, "inner"))
-    val nullRight = rFull.schema.fields.toSeq.map(f =>
-      org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name))
-    val retracts = baseOf(left)
-      .join(baseOf(right), cond, "left_anti")
-      .join(delta(right), cond, "left_semi")
-      .select(org.apache.spark.sql.functions.col("*") +: nullRight: _*)
-    signed(inserts, retracts)
+    val (l, r) = (left.toDF(), right.toDF())
+    val (dl, dr) = (delta(l), delta(r))
+    SignedDelta.deferred {
+      val inserts = delta(l).join(r, cond, "left")
+        .unionByName(baseOf(l).join(delta(r), cond, "inner"))
+      val nullRight = r.schema.fields.toSeq.map(f =>
+        org.apache.spark.sql.functions.lit(null).cast(f.dataType).as(f.name))
+      val retracts = baseOf(l)
+        .join(baseOf(r), cond, "left_anti")
+        .join(delta(r), cond, "left_semi")
+        .select(org.apache.spark.sql.functions.col("*") +: nullRight: _*)
+      signed(inserts, retracts)
+    }(None, joinSplicing(l, r, cond, "left", dl, dr))
   }
 
   /** Signed delta of a FULL OUTER join under insert-only source deltas —
@@ -317,44 +379,48 @@ object Ivm {
     * Identity: `Q(full) == (Q(base) ∪all inserts) ∖all retracts`
     * (DeltaIdentitySpec). Same naming/condition contract as
     * [[deltaLeftJoin]]. At scale all five terms are keyed joins whose δ
-    * sides read only the pruned delta partitions.
+    * sides read only the pruned delta partitions. `applyTo` splices on
+    * `coalesce(lk, rk)` of the first equi-conjunct — the key of a
+    * matched row and of either null extension ([[joinSplicing]]).
     */
   def deltaFullJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
     import org.apache.spark.sql.functions.{col, lit}
-    val lFull = left.toDF()
-    val rFull = right.toDF()
-    val nullLeft = lFull.schema.fields.toSeq.map(f =>
-      lit(null).cast(f.dataType).as(f.name))
-    val nullRight = rFull.schema.fields.toSeq.map(f =>
-      lit(null).cast(f.dataType).as(f.name))
-    val lCols = lFull.columns.toSeq.map(col)
-    val rCols = rFull.columns.toSeq.map(col)
-    val inserts = delta(left).join(rFull, cond, "left")
-      .unionByName(baseOf(left).join(delta(right), cond, "inner"))
-      .unionByName(delta(right).join(lFull, cond, "left_anti")
-        .select(nullLeft ++ rCols: _*))
-    val retracts = baseOf(left)
-      .join(baseOf(right), cond, "left_anti")
-      .join(delta(right), cond, "left_semi")
-      .select(lCols ++ nullRight: _*)
-      .unionByName(baseOf(right)
-        .join(baseOf(left), cond, "left_anti")
-        .join(delta(left), cond, "left_semi")
-        .select(nullLeft ++ rCols: _*))
-    signed(inserts, retracts)
+    val (lFull, rFull) = (left.toDF(), right.toDF())
+    val (dl, dr) = (delta(lFull), delta(rFull))
+    SignedDelta.deferred {
+      val nullLeft = lFull.schema.fields.toSeq.map(f =>
+        lit(null).cast(f.dataType).as(f.name))
+      val nullRight = rFull.schema.fields.toSeq.map(f =>
+        lit(null).cast(f.dataType).as(f.name))
+      val lCols = lFull.columns.toSeq.map(col)
+      val rCols = rFull.columns.toSeq.map(col)
+      val inserts = delta(lFull).join(rFull, cond, "left")
+        .unionByName(baseOf(lFull).join(delta(rFull), cond, "inner"))
+        .unionByName(delta(rFull).join(lFull, cond, "left_anti")
+          .select(nullLeft ++ rCols: _*))
+      val retracts = baseOf(lFull)
+        .join(baseOf(rFull), cond, "left_anti")
+        .join(delta(rFull), cond, "left_semi")
+        .select(lCols ++ nullRight: _*)
+        .unionByName(baseOf(rFull)
+          .join(baseOf(lFull), cond, "left_anti")
+          .join(delta(lFull), cond, "left_semi")
+          .select(nullLeft ++ rCols: _*))
+      signed(inserts, retracts)
+    }(None, joinSplicing(lFull, rFull, cond, "full", dl, dr))
   }
 
   /** Signed delta of a RIGHT OUTER join: the mirror of [[deltaLeftJoin]]
     * (swap the sides, then restore Spark's left-columns-first output
-    * layout).
+    * layout). `applyTo` splices on the right side's equi-key column.
     */
   def deltaRightJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
     import org.apache.spark.sql.functions.col
-    val sd = deltaLeftJoin(right, left, cond)
     val order = (left.toDF().columns ++ right.toDF().columns).toSeq.map(col)
-    SignedDelta(sd.inserts.select(order: _*), sd.retracts.select(order: _*))
+    // a pure reorder: the mirrored splice (matched by name) carries over
+    deltaLeftJoin(right, left, cond).map(_.select(order: _*), _ => true)
   }
 
   /** Signed delta of a LEFT ANTI join ("A rows with NO match in B") under
@@ -366,15 +432,72 @@ object Ivm {
     *
     * Identity: `Q(full) == (Q(base) ∪all inserts) ∖all retracts`
     * (DeltaIdentitySpec). Same naming/condition contract as
-    * [[deltaLeftJoin]].
+    * [[deltaLeftJoin]]; `applyTo` splices on the left equi-key column
+    * the same way: `view ▷ touched ∪all (A ⋉ touched) ▷ (B ⋉ touched)`.
     */
   def deltaAntiJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
-    val inserts = delta(left).join(right.toDF(), cond, "left_anti")
-    val retracts = baseOf(left)
-      .join(baseOf(right), cond, "left_anti")
-      .join(delta(right), cond, "left_semi")
-    signed(inserts, retracts)
+    val (l, r) = (left.toDF(), right.toDF())
+    val (dl, dr) = (delta(l), delta(r))
+    SignedDelta.deferred {
+      val inserts = delta(l).join(r, cond, "left_anti")
+      val retracts = baseOf(l)
+        .join(baseOf(r), cond, "left_anti")
+        .join(delta(r), cond, "left_semi")
+      signed(inserts, retracts)
+    }(None, joinSplicing(l, r, cond, "left_anti", dl, dr))
+  }
+
+  /** The splice form of an outer or anti join rung: the view decomposes
+    * by the first equi-conjunct `lk = rk` (or `<=>`) of `cond` — a view
+    * row derives from one input row and the other side's rows of the
+    * SAME key, other conjuncts only narrow within a key. So
+    *
+    *   touched = δ(left).lk ∪ δ(right).rk
+    *   view′   = view ▷ touched ∪all (left ⋉ touched) ⋈how (right ⋉ touched)
+    *
+    * keyed in the view by `lk` ("left", "left_anti") or by
+    * `coalesce(lk, rk)` ("full": a null-extended side's key is NULL).
+    * Matching is null-safe, so a NULL key recomputes its own rows, which
+    * an `=` condition leaves unmatched. None (the pair form) when no
+    * conjunct equates a plain column of each side of one type, or column
+    * names repeat across the sides (the splice keys by name).
+    */
+  private def joinSplicing(left: DataFrame, right: DataFrame, cond: Column,
+      how: String, dl: DataFrame, dr: DataFrame): Option[Splicing] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualNullSafe, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.functions.{coalesce, col}
+    val names = (left.columns ++ right.columns).map(_.toLowerCase)
+    if (names.distinct.length != names.length) return None
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
+    }
+    val key = GraftSql.analyzed(left.join(right, cond, "inner")) match {
+      case Join(l, r, _, Some(c), _) =>
+        def sides(a: Attribute, b: Attribute) =
+          if (l.outputSet.contains(a) && r.outputSet.contains(b) &&
+              a.dataType == b.dataType) Some((a.name, b.name))
+          else None
+        conjuncts(c).iterator.flatMap {
+          case EqualTo(a: Attribute, b: Attribute) =>
+            sides(a, b).orElse(sides(b, a))
+          case EqualNullSafe(a: Attribute, b: Attribute) =>
+            sides(a, b).orElse(sides(b, a))
+          case _ => None
+        }.nextOption()
+      case _ => None
+    }
+    key.map { case (lk, rk) =>
+      val touched = once(Splice.resolve(
+        dl.select(col(lk)).unionByName(dr.select(col(rk).as(lk)))))
+      val full = how == "full"
+      Splicing(if (full) Set(lk, rk) else Set(lk),
+        Seq(if (full) coalesce(col(lk), col(rk)) else col(lk)), touched,
+        t => t.keep(left, Seq(col(lk)))
+          .join(t.keep(right, Seq(col(rk))), cond, how))
+    }
   }
 
   /** Insert-only delta of a set INTERSECT view (`A ∩ B`, distinct
@@ -629,6 +752,12 @@ object Ivm {
     * the plan is base/full-split and every scan is restricted to the
     * union of the affected keys. Identity (DeltaIdentitySpec):
     * `Q(full) == (Q(base) ∪all inserts) ∖all retracts`.
+    *
+    * `applyTo` does not difference: when every key surfaces in the view
+    * as a scan's own column, it splices `view ▷ aff ∪all Q(source ⋉ aff)`
+    * — the restricted full recompute replaces the affected keys' stored
+    * rows, and the base recompute and the net never run. The pair is
+    * built (netted and pinned) only when `inserts`/`retracts` are read.
     */
   def deltaKeyScoped(q: DataFrame => DataFrame, source: Dataset[_],
       keys: Seq[String]): SignedDelta = {
@@ -1149,18 +1278,15 @@ object Ivm {
         // grouping/aggregate expressions rebind unchanged
         val recompute = (restricted: DataFrame) => GraftSql.ofRows(spark,
           agg.copy(child = GraftSql.analyzed(restricted)))
-        lazy val resolved = Splice.resolve(touched)
-        val splice = (view: DataFrame) =>
-          Splice(view, keyNames, resolved, childDf, childKeys, recompute)
-        val pair = () => {
-          // base recompute stands in for the stored view
-          val sd = signedNet(
-            recompute(resolved.keep(childDf, childKeys)),
-            resolved.keep(baseOf(df), keyNames.map(col)))
-          (sd.inserts, sd.retracts)
-        }
-        // a parent rung scopes by this rung's touched groups
-        Some(new SignedDelta(pair, () => touched, Some(splice)))
+        val resolved = once(Splice.resolve(touched))
+        // the pair: a base recompute stands in for the stored view; a
+        // parent rung scopes by this rung's touched groups
+        Some(SignedDelta.deferred(signedNet(
+            recompute(resolved().keep(childDf, childKeys)),
+            resolved().keep(baseOf(df), keyNames.map(col))))(
+          Some(touched),
+          Some(Splicing(keyNames.toSet, keyNames.map(col), resolved,
+            t => recompute(t.keep(childDf, childKeys))))))
       case _ => None
     }
   }
@@ -1212,11 +1338,17 @@ object Ivm {
     e.transform { case a: AttributeReference => UnresolvedAttribute(a.name) }
   }
 
+  /** A peeled row-wise top: its transform (re-resolved by name) and
+    * which columns it passes through unchanged under their own names.
+    */
+  private final case class Rowwise(f: DataFrame => DataFrame,
+      keeps: String => Boolean)
+
   private def peelRowwise(
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        List[DataFrame => DataFrame]) = {
-    import org.apache.spark.sql.catalyst.expressions.{Expression => CExpr, SubqueryExpression}
+        List[Rowwise]) = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression => CExpr, SubqueryExpression}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
     def peelable(exprs: Seq[CExpr], child: LogicalPlan): Boolean =
       exprs.forall(e => e.deterministic &&
@@ -1226,11 +1358,16 @@ object Ivm {
       case Project(exprs, child) if peelable(exprs, child) =>
         val cols = exprs.map(ne => GraftSql.column(stripRefs(ne)))
         val (inner, fs) = peelRowwise(child)
-        (inner, fs :+ ((d: DataFrame) => d.select(cols: _*)))
+        def keeps(n: String) = exprs.count(_.name == n) == 1 && exprs.exists {
+          case a: Attribute => a.name == n
+          case Alias(a: Attribute, m) => m == n && a.name == n
+          case _ => false
+        }
+        (inner, fs :+ Rowwise(_.select(cols: _*), keeps))
       case Filter(cond, child) if peelable(Seq(cond), child) =>
         val c = GraftSql.column(stripRefs(cond))
         val (inner, fs) = peelRowwise(child)
-        (inner, fs :+ ((d: DataFrame) => d.filter(c)))
+        (inner, fs :+ Rowwise(_.filter(c), _ => true))
       case other => (other, Nil)
     }
   }
@@ -1248,14 +1385,8 @@ object Ivm {
       .reduce(_ unionByName _))
   }
 
-  private def applyPost(sd: SignedDelta,
-      post: List[DataFrame => DataFrame]): SignedDelta =
-    if (post.isEmpty) sd
-    else {
-      // built lazily; the cover is re-derived from the transformed pair
-      def f(d: DataFrame) = post.foldLeft(d)((acc, g) => g(acc))
-      SignedDelta.deferred(SignedDelta(f(sd.inserts), f(sd.retracts)))(None)
-    }
+  private def applyPost(sd: SignedDelta, post: List[Rowwise]): SignedDelta =
+    post.foldLeft(sd)((acc, r) => acc.map(r.f, r.keeps))
 
   private def aggJoinAuto(df: Dataset[_]): Option[SignedDelta] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -1302,7 +1433,7 @@ object Ivm {
         // case) and |groups|-sized — pin once
         lazy val aFull = pinSmall(sideFs.foldLeft(
           IvmAgg.merge(baseOf(aggDf), IvmAgg.deltaPartial(aggDf)))(
-          (d, f) => f(d)))
+          (d, r) => r.f(d)))
         // the other side's own step, three ways: STATIC (no registered
         // source below it — the A'⋈δB term vanishes), INSERT-ONLY (the
         // envelope rewrite applies — one extra insert arm), or SIGNED
@@ -1468,7 +1599,9 @@ object Ivm {
     * validate per-key decomposability, then rewrite the plan twice — a
     * "full" and a "base" instance — with EVERY scan restricted to the
     * affected keys and every REGISTERED delta-source scan base/full-split.
-    * The signed difference of the two restricted recomputes is the delta.
+    * The signed difference of the two restricted recomputes is the delta;
+    * the splice ([[deltaKeyScoped]]) needs only the full instance, which
+    * it restricts by the resolved touched keys instead of `aff`.
     *
     * Multi-source: the affected-key set is the UNION of each registered
     * scan's delta keys, so a delta on any side selects that key's
@@ -1510,9 +1643,10 @@ object Ivm {
         s"deltaKeyScoped: scan of ${s.nodeName} does not output the " +
           s"scoping keys $keys — the affected-key restriction cannot " +
           "graft there; use Ivm.deltaByDiff")
-    val aff = deltaScans.map(s => delta(GraftSql.ofRows(spark, s))
+    val affRows = deltaScans.map(s => delta(GraftSql.ofRows(spark, s))
         .select(keys.map(col): _*))
-      .reduce(_ unionByName _).distinct()
+      .reduce(_ unionByName _)
+    val aff = affRows.distinct()
     def affJoin(child: LogicalPlan): LogicalPlan = {
       val affPlan = ResolvedHint(
         PosDeltaRule.freshInstance(GraftSql.analyzed(aff)),
@@ -1531,6 +1665,25 @@ object Ivm {
       case s if isIn(deltaScans)(s) => affJoin(BaseScan(s))
       case s if isIn(scans)(s) => affJoin(s)
     })
-    signedNet(GraftSql.ofRows(spark, fullR), GraftSql.ofRows(spark, baseR))
+    val sd = signedNet(GraftSql.ofRows(spark, fullR),
+      GraftSql.ofRows(spark, baseR))
+    // the splice keys the stored view by the scoping keys: each must
+    // surface once, as a scan's own column (not a recomputed value)
+    val keyed = keys.forall { k =>
+      val outs = plan.output.filter(_.name == k)
+      outs.size == 1 &&
+        scans.exists(_.output.exists(_.exprId == outs.head.exprId))
+    }
+    if (!keyed) sd
+    else {
+      val touched = once(Splice.resolve(affRows))
+      val restricted = (t: Splice.Touched) => GraftSql.ofRows(spark,
+        plan.transformUp {
+          case s if isIn(scans)(s) =>
+            GraftSql.analyzed(t.keep(GraftSql.ofRows(spark, s), keys.map(col)))
+        })
+      SignedDelta.deferred(sd)(None,
+        Some(Splicing(keys.toSet, keys.map(col), touched, restricted)))
+    }
   }
 }

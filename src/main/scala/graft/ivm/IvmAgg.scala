@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Expand, Project}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSql
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** Incremental maintenance for GROUPED AGGREGATES under insert-only deltas —
   * an extension beyond the reference's rewrite envelope (which declines
@@ -322,15 +323,29 @@ object IvmAgg {
     * Requires AT MOST ONE ROW PER GROUP KEY in `view` (and in the
     * partial, which is grouped by construction): a view holding two rows
     * for one key is merged as if it held one of them.
+    *
+    * Each merged scalar column is cast to the partial's type — the
+    * query's own output type. Without the cast a decimal sum would widen
+    * by one digit per merge (`m + d` of two decimal(28,2) is
+    * decimal(29,2)), so a stored view's schema would drift cycle by cycle
+    * away from the query's, and every cycle would compile new code for
+    * the merge. (The vector sum's elementwise combine keeps its array
+    * type; only its element nullability differs, which a cast cannot
+    * narrow.)
     */
   def merge(view: DataFrame, delta: AggDelta): DataFrame = {
     val keys = delta.keys
     val vals = delta.specs.map(_.name)
-    alignByKeys(view.select((keys ++ vals).map(col): _*),
-        delta.partial.select((keys ++ vals).map(col): _*), keys)
-      .select(keys.map(col) ++
-        delta.specs.map(sp => sp.combine(col(s"__graft_l_${sp.name}"),
-          col(s"__graft_r_${sp.name}")).as(sp.name)): _*)
+    val partial = delta.partial.select((keys ++ vals).map(col): _*)
+    alignByKeys(view.select((keys ++ vals).map(col): _*), partial, keys)
+      .select(keys.map(col) ++ delta.specs.map { sp =>
+        val merged = sp.combine(col(s"__graft_l_${sp.name}"),
+          col(s"__graft_r_${sp.name}"))
+        (partial.schema(sp.name).dataType match {
+          case _: ArrayType | _: MapType | _: StructType => merged
+          case t => merged.cast(t)
+        }).as(sp.name)
+      }: _*)
   }
 
   /** One-shot convenience: the maintained result of an aggregate query

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   *   view′    = view ▷ touched  ∪all  agg(snapshot ⋉ touched)
   *
   * A small single-key touched set (bounded by the window's churn — the
-  * normal case) reaches the log-backed snapshot as a literal IN, which
+  * normal case) reaches the log-backed snapshot as an IN set, which
   * prunes FILES (partition filter when the key is the partition column,
   * stats skip otherwise). The returned frame is EAGER (`localCheckpoint`):
   * callers advance their cut only after it materializes, so a failed
@@ -27,7 +27,7 @@ private[ivm] object LakeSplice {
     val kc = keys.map(col)
     val touched = Splice.resolve(
       inserts.select(kc: _*).unionByName(retracts.select(kc: _*)))
-    val spliced = Splice(view, keys, touched, snapshot, kc, agg)
+    val spliced = Splice(view, kc, touched, agg(touched.keep(snapshot, kc)))
     graft.engine.Labeled.job(view.sparkSession, "splice:view-pin") {
       spliced.localCheckpoint()
     }

@@ -115,13 +115,17 @@ final class IncrementalAggView(
 
 /** Incremental maintenance of a LEFT OUTER / LEFT ANTI join view over TWO
   * append-only tables, via the signed delta ([[Ivm.deltaLeftJoin]] /
-  * [[Ivm.deltaAntiJoin]]): per cycle, `view' = (view ∪all inserts) ∖all
-  * retracts` — the retracts being exactly the null-extended (outer) or
-  * no-match (anti) rows that new right-side rows invalidate, which a pure
-  * append model cannot express. Alternating parquet generations like
-  * [[IncrementalAggView]]; production sinks apply the pair as upsert +
-  * delete. `cond` must reference columns by name and the two sides'
-  * column names must be disjoint (the [[Ivm.SignedDelta]] contract).
+  * [[Ivm.deltaAntiJoin]]) — whose change includes RETRACTS: the
+  * null-extended (outer) or no-match (anti) rows that new right-side rows
+  * invalidate, which a pure append model cannot express. Per cycle the
+  * delta's `applyTo` splices on the join key: the previous generation
+  * minus the rows of every key a δ row carries, plus those keys' rows
+  * recomputed — `view' = view ▷ touched ∪all (L ⋉ touched) ⋈ (R ⋉ touched)`
+  * (without a plain equi-key it falls back to `(view ∪all inserts) ∖all
+  * retracts`). Alternating parquet generations like [[IncrementalAggView]];
+  * production sinks apply it as a delete + insert on the touched keys.
+  * `cond` must reference columns by name and the two sides' column names
+  * must be disjoint (the [[Ivm.SignedDelta]] contract).
   */
 final class IncrementalSignedView(
     spark: SparkSession,
@@ -174,7 +178,8 @@ final class IncrementalSignedView(
 /** A windowed/sessionized view maintained across append cycles by
   * KEY-SCOPED recompute ([[Ivm.deltaKeyScoped]]): each cycle recomputes
   * ONLY the key partitions the new rows touch (a day's events → a sliver
-  * of users) and applies the signed result to the previous generation.
+  * of users) and splices them into the previous generation in place of
+  * those keys' old rows.
   * Completes the streaming maintenance family: [[IncrementalView]]
   * (envelope appends), [[IncrementalAggView]] (mergeable aggregates),
   * [[IncrementalSignedView]] (outer/anti joins), this (windows/sessions).
@@ -208,8 +213,10 @@ final class IncrementalKeyScopedView(
       full.createOrReplaceTempView(scoped)
       val t = spark.table(scoped)
       val sd = Ivm.deltaKeyScoped(q, t, keys)
+      // the first generation splices into an empty view: reading
+      // `sd.inserts` for its schema would build (and pin) the netted pair
       val prev =
-        if (gen < 0) sd.inserts.limit(0)
+        if (gen < 0) q(t).limit(0)
         else spark.read.parquet(s"$sinkPath/g$gen")
       sd.applyTo(prev)
         .write.mode("overwrite").parquet(s"$sinkPath/g${(gen + 1) % 2}")
@@ -277,7 +284,7 @@ final class IncrementalAutoView(
           else graft.ivm.IvmAgg.merge(
             spark.read.parquet(s"$sinkPath/g$gen"), ad)
         case graft.ivm.Ivm.ApplySigned(sd) =>
-          route = Some("signed"); sd.applyTo(prev(sd.inserts))
+          route = Some("signed"); sd.applyTo(prev(q.toDF()))
         case graft.ivm.Ivm.DiffRows(_) =>
           route = Some("diff"); q.toDF() // recompute: the honest fallback
       }

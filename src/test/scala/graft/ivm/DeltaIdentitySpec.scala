@@ -1090,30 +1090,33 @@ class DeltaIdentitySpec extends AnyFunSuite with SparkFixture {
       "retracts (r7)") {
     import spark.implicits._
     // A: static {(1,10),(1,7),(2,5)}; B: base ∅, δ cancels (1,10) —
-    // the EXCEPT child retracts group 1's max, and the recompute must
-    // surface the runner-up 7 (no merge algebra can — the view lost it)
+    // the EXCEPT child retracts group 10's max, and the recompute must
+    // surface the runner-up 7 (no merge algebra can — the view lost it).
+    // The COMPUTED group key keeps key-scoping (it scopes by scan
+    // columns) from taking the view first.
     Seq((1L, 10L), (1L, 7L), (2L, 5L)).toDF("k", "v")
       .createOrReplaceTempView("gs_a")
     Seq((1L, 10L, 100L)).toDF("k", "v", "m")
       .createOrReplaceTempView("gs_b")
     DeltaSources.register("gs_a", "v >= 999")   // registered, empty δ
     DeltaSources.register("gs_b", "m >= 100")
-    val q = spark.table("gs_a")
-      .except(spark.table("gs_b").select("k", "v"))
-      .groupBy("k").agg(max(col("v")).as("mx"))
-    Ivm.maintainAuto(q) match {
-      case Ivm.ApplySigned(sd) =>
+    def q(b: DataFrame) = spark.table("gs_a")
+      .except(b.select("k", "v"))
+      .groupBy((col("k") * 10).as("g")).agg(max(col("v")).as("mx"))
+    val full = q(spark.table("gs_b"))
+    Ivm.maintainAuto(full) match {
+      // the group-scoped rung splices, and its cover is the touched
+      // group keys alone
+      case Ivm.ApplySigned(sd) if sd.spliced &&
+          sd.touched.columns.toSeq == Seq("g") =>
         assert(sd.retracts.collect().map(r => (r.getLong(0), r.getLong(1)))
-          .toSet == Set((1L, 10L)), "old max must retract")
+          .toSet == Set((10L, 10L)), "old max must retract")
         assert(sd.inserts.collect().map(r => (r.getLong(0), r.getLong(1)))
-          .toSet == Set((1L, 7L)), "runner-up must surface")
-        // untouched group 2 nets away entirely
-        val baseView = spark.table("gs_a")
-          .except(spark.table("gs_b").filter(col("m") < 100)
-            .select("k", "v"))
-          .groupBy("k").agg(max(col("v")).as("mx"))
-        assertMultisetEqual(q, sd.applyTo(baseView))
-      case other => fail(s"expected ApplySigned (group-scoped), got $other")
+          .toSet == Set((10L, 7L)), "runner-up must surface")
+        // untouched group 20 nets away entirely
+        val baseView = q(spark.table("gs_b").filter(col("m") < 100))
+        assertMultisetEqual(full, sd.applyTo(baseView))
+      case other => fail(s"expected the group-scoped splice, got $other")
     }
   }
 
@@ -1289,26 +1292,156 @@ class DeltaIdentitySpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  // ---- outer/anti join splice: view ▷ touched ∪all (A ⋉ t) ⋈ (B ⋉ t) ----
+
+  /** A(k, av, af) and B(k2, bv, bf), δ rows flagged `af`/`bf` = 1:
+    *   key 2 — a base and a δ left row, three right matches (one base)
+    *   key 3 — a base left row only δB matches: its null extension leaves
+    *   key 6 — a δ left row with no match
+    *   key 7 — a δ right row with no match (right/full joins keep it)
+    *   NULL  — left and right rows, base and δ, on either side
+    */
+  private def joinSides(tag: String): (String, String) = {
+    import spark.implicits._
+    Seq((Some(1L), "a1", 0), (Some(2L), "a2", 0), (Some(3L), "a3", 0),
+        (Some(4L), "a4", 0), (None, "an", 0),
+        (Some(6L), "a6", 1), (Some(2L), "a2b", 1), (None, "an2", 1))
+      .toDF("k", "av", "af").createOrReplaceTempView(s"jsp_${tag}_a")
+    Seq((Some(2L), 10L, 0), (Some(4L), 12L, 0), (None, 11L, 0),
+        (Some(3L), 100L, 1), (Some(2L), 110L, 1), (Some(2L), 120L, 1),
+        (Some(7L), 140L, 1), (None, 130L, 1))
+      .toDF("k2", "bv", "bf").createOrReplaceTempView(s"jsp_${tag}_b")
+    DeltaSources.register(s"jsp_${tag}_a", "af = 1")
+    DeltaSources.register(s"jsp_${tag}_b", "bf = 1")
+    (s"jsp_${tag}_a", s"jsp_${tag}_b")
+  }
+
+  /** Maintain `q` over the fixture from its stored base answer, with
+    * exchange reuse on and off: `applyTo` must equal the recompute, and
+    * splice exactly when `spliced`. Returns the applied view (reuse on).
+    */
+  private def joinSplice(tag: String, spliced: Boolean)(
+      q: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val (a, b) = joinSides(tag)
+    val key = "spark.sql.exchange.reuse"
+    val got = for (reuse <- Seq("true", "false")) yield {
+      spark.conf.set(key, reuse)
+      try {
+        val full = q(spark.table(a), spark.table(b))
+        val stored = q(spark.table(a).filter(col("af") =!= 1),
+          spark.table(b).filter(col("bf") =!= 1)).localCheckpoint()
+        Ivm.maintainAuto(full) match {
+          case Ivm.ApplySigned(sd) =>
+            assert(sd.spliced == spliced, s"$tag: expected spliced=$spliced")
+            val applied = sd.applyTo(stored).localCheckpoint()
+            assertMultisetEqual(applied, full)
+            applied
+          case other => fail(s"$tag: expected ApplySigned, got $other")
+        }
+      } finally spark.conf.unset(key)
+    }
+    got.head
+  }
+
+  test("join splice: left outer join — NULL keys, a newly matched null " +
+      "extension, an unmatched δ, several matches") {
+    val eq = (a: DataFrame, b: DataFrame) =>
+      a.join(b, col("k") === col("k2"), "left")
+    val got = joinSplice("left", spliced = true)(eq)
+    // δB (3, 100) matches base row 3: its null extension must leave
+    assert(got.filter(col("k") === 3L && col("k2").isNull).isEmpty)
+    assert(got.filter(col("k") === 3L).count() == 1)
+    // the unmatched δ left row arrives null-extended
+    assert(got.filter(col("k") === 6L && col("k2").isNull).count() == 1)
+    // key 2: two left rows × three right matches
+    assert(got.filter(col("k") === 2L).count() == 6)
+    // `=` never matches a NULL key: both NULL left rows stay null-extended
+    assert(got.filter(col("k").isNull && col("k2").isNull).count() == 2)
+    // `<=>` does: each NULL left row matches both NULL right rows
+    val nullSafe = joinSplice("left_ns", spliced = true)((a, b) =>
+      a.join(b, col("k") <=> col("k2") && col("bv") > 0, "left"))
+    assert(nullSafe.filter(col("k").isNull).count() == 4)
+  }
+
+  test("join splice: right outer, full outer and anti join mirrors") {
+    val right = joinSplice("right", spliced = true)((a, b) =>
+      a.join(b, col("k") === col("k2"), "right"))
+    assert(right.columns.toSeq == Seq("k", "av", "af", "k2", "bv", "bf"))
+    assert(right.filter(col("k2") === 7L && col("k").isNull).count() == 1)
+    assert(right.filter(col("k2").isNull && col("k").isNull).count() == 2)
+    val full = joinSplice("full", spliced = true)((a, b) =>
+      a.join(b, col("k") === col("k2"), "full"))
+    assert(full.filter(col("k") === 3L && col("k2").isNull).isEmpty)
+    assert(full.filter(coalesce(col("k"), col("k2")).isNull).count() == 4)
+    val anti = joinSplice("anti", spliced = true)((a, b) =>
+      a.join(b, col("k") === col("k2"), "left_anti"))
+    // δB retracts 3; 6 and both NULL rows match nothing
+    assert(anti.select("av").collect().map(_.getString(0)).toSet ==
+      Set("a1", "a6", "an", "an2"))
+  }
+
+  test("join splice: peeled tops splice while they keep the key, and the " +
+      "pair form applies when a projection drops it") {
+    val kept = joinSplice("peel_kept", spliced = true)((a, b) =>
+      a.join(b, col("k") === col("k2"), "left")
+        .filter(col("av") =!= "a4").select("k", "av", "bv"))
+    assert(kept.columns.toSeq == Seq("k", "av", "bv"))
+    joinSplice("peel_dropped", spliced = false)((a, b) =>
+      a.join(b, col("k") === col("k2"), "left").select("av", "bv"))
+    joinSplice("peel_renamed", spliced = false)((a, b) =>
+      a.join(b, col("k") === col("k2"), "left_anti")
+        .select(col("k").as("kk"), col("av")))
+  }
+
+  test("join splice: applyTo runs no pin jobs") {
+    val (a, b) = joinSides("jobs")
+    val q = (x: DataFrame, y: DataFrame) =>
+      x.join(y, col("k") === col("k2"), "left")
+    val stored = q(spark.table(a).filter(col("af") =!= 1),
+      spark.table(b).filter(col("bf") =!= 1)).localCheckpoint()
+    val sd = Ivm.deltaLeftJoin(spark.table(a), spark.table(b),
+      col("k") === col("k2"))
+    assert(sd.spliced)
+    val pins = (descs: Seq[String]) =>
+      descs.count(d => d.contains("ivm:applyTo-pin") || d.contains("ivm:pin"))
+    val (rows, descs) = jobsOf(sd.applyTo(stored).collect())
+    assert(pins(descs) == 0, s"the splice pinned: $descs")
+    assert(rows.length == q(spark.table(a), spark.table(b)).count())
+    // the same change applied as a pair pins both frames
+    val (_, pairDescs) = jobsOf(
+      Ivm.SignedDelta(sd.inserts, sd.retracts).applyTo(stored).collect())
+    assert(pins(pairDescs) > 0, s"the pair form ran no pin: $pairDescs")
+  }
+
+  /** `body`'s result and the descriptions of the jobs it ran. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
   test("a lazy pin runs its plan's exchange stages when it is taken") {
     // `localCheckpoint(false)` defers only the FINAL stage: under AQE the
     // shuffle and broadcast stages below it run at construction, one job
     // each — a pin over an exchange is never free to build
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     def jobs[T](body: => T): (T, Int) = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      org.apache.spark.graft.ListenerBus.drain(sc)
-      sc.addSparkListener(l)
-      try {
-        val r = body
-        org.apache.spark.graft.ListenerBus.drain(sc)
-        (r, n.get)
-      } finally sc.removeSparkListener(l)
+      val (r, descs) = jobsOf(body)
+      (r, descs.size)
     }
     val grouped = spark.range(1000)
       .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("c"))
