@@ -905,9 +905,9 @@ object Queries {
     // oracle derives inserts/retracts independently as the two-directional
     // EXCEPT ALL of the windowed full/base views; running sums go through
     // DECIMAL so the interleaved accumulation is bit-exact in both engines.
-    // This query is also the standing canary for the exchange-reuse
-    // mitigation (SignedDelta application composes checkpointed deltas —
-    // see Ivm.SignedDelta.applyTo).
+    // It is also the canary for exchange reuse: both nets are read in ONE
+    // query, the shape once reported to mis-evaluate with reuse on (see
+    // Ivm.SignedDelta.retracts for why the two nets never share one).
     QueryDef("delta_keyscoped",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
@@ -920,9 +920,8 @@ object Queries {
         val ev = t(s, d, "events")
           .select("user_id", "event_id", "ts", "value")
         val sd = Ivm.deltaKeyScoped(q, ev, Seq("user_id"))
-        sd.inserts.localCheckpoint().withColumn("sign", lit(1L))
-          .unionByName(
-            sd.retracts.localCheckpoint().withColumn("sign", lit(-1L)))
+        sd.inserts.withColumn("sign", lit(1L))
+          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
           .orderBy("user_id", "event_id", "sign")
       },
       Some("""WITH e AS (

@@ -1,6 +1,7 @@
 package graft.ivm
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, explode, lit, sequence, sum}
 import org.apache.spark.sql.graft.GraftSql
 
 /** Public API for incremental view maintenance (the reference's novel
@@ -109,8 +110,12 @@ object Ivm {
   final case class ApplySigned(delta: SignedDelta) extends AutoMaintenance
 
   /** Differencing fallback (windows, sorts, non-mergeable aggregates):
-    * `rows` are `Q(full) ∖all Q(base)` from a full recompute — correct for
-    * ANY deterministic query, with no incremental speedup.
+    * `rows` are `Q(full) ∖all Q(base)` from a full recompute — only the
+    * INSERT half of the change. A row that leaves the view has no
+    * representation here, so appending `rows` to the stored view is
+    * correct only for a view whose change never retracts (e.g. a global
+    * rank by an ever-growing key); any other view must be overwritten
+    * with `Q(full)` instead, which is what `IvmStream` does.
     */
   final case class DiffRows(rows: DataFrame) extends AutoMaintenance
 
@@ -119,28 +124,40 @@ object Ivm {
     * `Q(full) == (Q(base) ∪all inserts) ∖all retracts` — pinned by
     * `DeltaIdentitySpec`.
     *
-    * Both frames are built LAZILY, on first read: a view maintained
-    * through [[applyTo]]'s splice, or a parent rung that consumes only
-    * the [[touched]] cover (the group-scoped splice), never pays for the
-    * pair's plans, pins and net aggregate. The oracles and the identity
-    * specs read them.
+    * Held as ONE weighted frame, a Z-set (DBSP, Budiu et al., VLDB
+    * 2023): the output columns plus a `__graft_w: Long` weight, not
+    * netted — a row may appear under several weights that cancel.
+    * `inserts` is its net positive part and `retracts` its net negative
+    * part, each netted on first read; a view maintained through
+    * [[applyTo]], or a parent rung that reads only the [[touched]] cover
+    * or the weighted frame, never nets the two apart.
     */
   final class SignedDelta private[ivm] (
-      pair: () => (DataFrame, DataFrame),
+      frame: () => DataFrame,
       cover: () => DataFrame,
       splice: Option[Splicing]) {
+    import SignedDelta.{W, netPositive}
 
-    private lazy val frames = pair()
+    /** The change: output columns plus `__graft_w`, not netted. */
+    private[ivm] lazy val weighted: DataFrame = frame()
 
-    def inserts: DataFrame = frames._1
+    /** Rows whose weights sum above 0, each repeated that many times. */
+    lazy val inserts: DataFrame = netPositive(weighted)
 
-    def retracts: DataFrame = frames._2
+    /** Rows whose NEGATED weights sum above 0. The retract net sums
+      * `−w` instead of filtering `Σw < 0`, so its aggregate is never
+      * canonically identical to the insert net's and exchange reuse
+      * cannot fold a query that reads both nets into two filters over one
+      * shared aggregate.
+      */
+    lazy val retracts: DataFrame = netPositive(weighted.withColumn(W, -col(W)))
 
     /** A δ-sized COVER of the change: a frame over a subset of the output
       * columns whose rows include every inserted or retracted row's
       * values on those columns (more rows are allowed — a cover may
       * over-approximate). It is read without netting, so it never needs
-      * `inserts`/`retracts` built; by default it is their union.
+      * `inserts`/`retracts` built; by default it is the change's rows,
+      * un-netted.
       */
     private[ivm] lazy val touched: DataFrame = cover()
 
@@ -157,70 +174,81 @@ object Ivm {
       * ([[Splice]]): the stored view supplies the untouched keys, nothing
       * is netted or pinned.
       *
-      * PAIR — the rungs without such a key (EXCEPT, top-k, the merge-
+      * WEIGHTED — the rungs without such a key (EXCEPT, top-k, the merge-
       * derived agg-join and two-level rungs, a join condition with no
       * plain-column equi-conjunct, a peeled top that drops or renames the
-      * key, pairs built with `SignedDelta(inserts, retracts)`):
-      * `(view ∪all inserts) ∖all retracts`, with BOTH delta frames cut to
-      * checkpoint leaves first. Composing the two lazy frames
-      * directly into one query can return wrong results on Spark 4.1:
-      * with `spark.sql.exchange.reuse` (default on), a query containing
-      * several canonically-identical window-over-semi-join exchange
-      * subtrees from the two frames mis-evaluates one copy (observed
-      * concretely: a key-scoped delta's `inserts ∪ retracts` emitted base
-      * rows that net to zero; disabling exchange reuse fixed it, and the
-      * analyzed AND optimized plans were both correct). Checkpointing
-      * cuts the shared plan shapes out of the composed query — and
-      * matches production behavior, where a sink applies materialized
-      * deltas as upsert + delete anyway. The deltas are small by design
-      * (that is the point of incremental maintenance), so the
-      * materialization cost is the delta's own size.
+      * key, pairs built with `SignedDelta(inserts, retracts)`): one
+      * query, `(view × +1 ⊎ weighted)` grouped by the view's columns,
+      * keeping each row whose weights sum above 0, that many times.
       */
     def applyTo(view: DataFrame): DataFrame = splice match {
       case Some(s) => s(view)
       case None =>
-        // exceptAll matches columns by POSITION: re-project both frames
-        // to the view's column order first (rungs built over
-        // using-column joins emit key-first order, which need not match
-        // the view's)
-        val cols = view.columns.toSeq
-          .map(org.apache.spark.sql.functions.col)
-        // `localCheckpoint(false)` cuts each plan to a LogicalRDD leaf at
-        // construction (which is what defuses the exchange-reuse hazard
-        // above) and defers only the FINAL stage to the first consuming
-        // job: under AQE every shuffle and broadcast stage of the pinned
-        // plan still runs right here, as its own job
-        graft.engine.Labeled.job(view.sparkSession, "ivm:applyTo-pin") {
-          view.unionByName(inserts.localCheckpoint(false).select(cols: _*))
-            .exceptAll(retracts.localCheckpoint(false).select(cols: _*))
-        }
+        // in the view's column order: rungs built over using-column
+        // joins emit key-first order, which need not match the view's
+        val cols = view.columns.toSeq.map(col)
+        netPositive(view.select(cols :+ lit(1L).as(W): _*)
+          .unionByName(weighted.select(cols :+ col(W): _*)))
     }
 
-    /** Whether `applyTo` splices or nets a pair. */
+    /** Whether `applyTo` splices or nets a weighted frame. */
     private[ivm] def spliced: Boolean = splice.isDefined
 
     /** This delta through a deterministic row-wise `f` (a peeled
-      * Project/Filter top; `keeps` tells which columns it passes through
-      * unchanged under their own names): both frames map, the splice's
-      * recompute maps while `f` keeps every view column the splice key
-      * reads, and the cover stays while `f` keeps its columns.
+      * Project/Filter top that passes `__graft_w` through; `keeps` tells
+      * which columns it passes through unchanged under their own names):
+      * the weighted frame maps, the splice's recompute maps while `f`
+      * keeps every view column the splice key reads, and the cover stays
+      * while `f` keeps its columns (else the mapped frame covers).
       */
     private[ivm] def map(f: DataFrame => DataFrame,
         keeps: String => Boolean): SignedDelta =
-      new SignedDelta(() => (f(inserts), f(retracts)),
+      new SignedDelta(() => f(weighted),
         () => if (touched.columns.forall(keeps)) touched
-          else f(inserts).unionByName(f(retracts)),
+          else f(weighted).drop(W),
         splice.filter(_.reads.forall(keeps))
           .map(s => s.copy(recompute = t => f(s.recompute(t)))))
 
     override def toString: String =
-      s"SignedDelta(${if (spliced) "splice" else "pair"})"
+      s"SignedDelta(${if (spliced) "splice" else "weighted"})"
   }
 
   object SignedDelta {
+    private[ivm] val W = "__graft_w"
+
     def apply(inserts: DataFrame, retracts: DataFrame): SignedDelta =
-      new SignedDelta(() => (inserts, retracts),
+      new SignedDelta(() => tagged(inserts, retracts),
         () => inserts.unionByName(retracts), None)
+
+    /** `plus × +1 ⊎ minus × −1` in `plus`'s column order. */
+    private[ivm] def tagged(plus: DataFrame, minus: DataFrame): DataFrame = {
+      val cols = plus.columns.toSeq
+      require(!cols.exists(_.startsWith("__graft_")),
+        "__graft_ column names are reserved")
+      def tag(df: DataFrame, w: Long) =
+        df.select(cols.map(col) :+ lit(w).as(W): _*)
+      tag(plus, 1L).unionByName(tag(minus, -1L))
+    }
+
+    /** An insert-only change: every row weighs +1. */
+    private[ivm] def appendOnly(rows: DataFrame): SignedDelta =
+      new SignedDelta(() => rows.withColumn(W, lit(1L)), () => rows, None)
+
+    /** `df`'s rows grouped on every column but `__graft_w`, kept where the
+      * weights sum above 0 and repeated that many times.
+      */
+    private[ivm] def netPositive(df: DataFrame): DataFrame = {
+      val cols = df.columns.toSeq.filter(_ != W).map(col)
+      df.groupBy(cols: _*).agg(sum(col(W)).as(W)).filter(col(W) > 0)
+        .withColumn("__graft_i", explode(sequence(lit(1L), col(W))))
+        .select(cols: _*)
+    }
+
+    /** `cols` of `df`, plus its weight when it has one: how a row-wise
+      * top keeps a weighted frame weighted.
+      */
+    private[ivm] def select(df: DataFrame, cols: Seq[Column]): DataFrame =
+      df.select(cols ++ df.columns.find(_ == W).map(col): _*)
 
     /** A rung's delta built on first read, applied through `splicing`
       * when the rung has one. `cover` (also evaluated on first read) is a
@@ -231,7 +259,7 @@ object Ivm {
         cover: => Option[DataFrame],
         splicing: Option[Splicing] = None): SignedDelta = {
       lazy val sd = build
-      new SignedDelta(() => (sd.inserts, sd.retracts),
+      new SignedDelta(() => sd.weighted,
         () => cover.getOrElse(sd.touched), splicing)
     }
   }
@@ -259,70 +287,36 @@ object Ivm {
     () => v
   }
 
-  /** Construct a [[SignedDelta]] with every ExprId in both plans re-minted
-    * tree-order ([[PosDeltaRule.freshInstance]]). The signed constructors
-    * build plans whose union/join arms REPEAT subtrees (the same scan under
-    * δ and base, the affected-key set under both restrictions); a plan with
-    * internally repeated ExprIds composes wrongly once a caller duplicates
-    * it again — `view ∪all inserts ∖all retracts` puts several copies in
-    * one query, and the analyzer's DeduplicateRelations untangles
+  /** The signed change `plus × +1 ⊎ minus × −1`, with every ExprId of the
+    * weighted frame re-minted tree-order ([[PosDeltaRule.freshInstance]]).
+    * The signed constructors build plans whose union/join arms REPEAT
+    * subtrees (the same scan under δ and base, the affected-key set under
+    * both restrictions); a plan with internally repeated ExprIds composes
+    * wrongly once a caller duplicates it again — `applyTo`, or a query
+    * reading both `inserts` and `retracts`, puts several copies in one
+    * query, and the analyzer's DeduplicateRelations untangles
     * cross-branch duplicates only when each branch is internally
     * duplicate-free (observed concretely: without this,
     * `inserts.exceptAll(inserts)` on a key-scoped delta returned rows).
     */
-  private def signed(inserts: DataFrame, retracts: DataFrame): SignedDelta =
-    SignedDelta(reMint(inserts), reMint(retracts))
+  private def signedNet(plus: DataFrame, minus: DataFrame): SignedDelta =
+    weightedDelta(SignedDelta.tagged(plus, minus))
 
-  /** `df` with every ExprId re-minted tree-order (see [[signed]]'s doc for
-    * why internally repeated ids are a composition hazard).
+  /** A rung's change given as its weighted frame `w`, built on first read
+    * and re-minted ([[signedNet]]); `w` itself, un-netted, covers it.
+    */
+  private def weightedDelta(w: => DataFrame): SignedDelta = {
+    lazy val frame = w
+    new SignedDelta(() => reMint(frame), () => frame.drop(SignedDelta.W),
+      None)
+  }
+
+  /** `df` with every ExprId re-minted tree-order (see [[signedNet]]'s doc
+    * for why internally repeated ids are a composition hazard).
     */
   private[ivm] def reMint(df: DataFrame): DataFrame =
     GraftSql.ofRows(df.sparkSession,
       PosDeltaRule.freshInstance(GraftSql.analyzed(df)))
-
-  /** Eagerly pin a DELTA-SIZED intermediate (δ partials, affected-group
-    * views, signed net inputs) so frames the rungs reference several times
-    * execute ONCE instead of once per plan occurrence — exchange reuse is
-    * deliberately not trusted here (see [[signedNet]]'s netting comment),
-    * so without pinning the maintenance cycle's cost is multiplicative in
-    * how often a subplan is inlined (measured 2–4× on the agg-join and
-    * two-level rungs). Every pinned frame is |touched-groups|- or
-    * |delta|-sized by design — the materialization is the delta's own
-    * size, the same rationale as [[SignedDelta.applyTo]], and matches
-    * production, where partials and view probes are materialized state.
-    * ONE caller stretches the "delta-sized" rationale: the key-scoped
-    * rung's [[signedNet]] inputs are affected-KEY restricted full/base
-    * recomputes, which under broad-key churn (a delta touching most
-    * keys) approach corpus size — there the pin trades memory for the
-    * guaranteed-once execution, and the rung itself is the wrong choice
-    * anyway (differencing wins when the delta spans most keys, which is
-    * why maintainAuto keeps both). Note also that a pin runs cluster
-    * jobs where it is TAKEN, not where its frame is consumed: the
-    * grouped top-k and two-level rungs pin while maintainAuto builds
-    * them, and every [[SignedDelta.deferred]] rung (signedNet, deltaAgg,
-    * agg-join) pins when `inserts`/`retracts` are first read. Callers
-    * can disable via `spark.graft.ivm.pinSignedNet=false` — tests do, to
-    * audit the full LAZY maintenance plan (pinning would execute the
-    * interesting subtrees before the plan is inspected, leaving only RDD
-    * scans to inspect).
-    */
-  private def pinSmall(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.ivm.pinSignedNet", "true").toBoolean)
-      // constraint normalization: a raw checkpoint leaf re-minted by
-      // [[reMint]] can carry STALE constraint ExprIds into a Union and
-      // blow up its constraint rewrite (see GraftSql.normalizeRddConstraints).
-      // `localCheckpoint(false)`: the same LogicalRDD leaf as an eager
-      // pin (guaranteed-once execution, plan cut), but only the FINAL
-      // stage is deferred to the first consuming job. Under AQE every
-      // shuffle and broadcast stage of the pinned plan still runs here,
-      // one job each (pinned by a DeltaIdentitySpec job-count test), so a
-      // pin over an exchange costs jobs at construction either way; what
-      // the lazy form saves is the final-stage barrier job per pin
-      graft.engine.Labeled.job(df.sparkSession, "ivm:pin") {
-        GraftSql.normalizeRddConstraints(df.localCheckpoint(false))
-      }
-    else df
 
   /** Signed delta of a LEFT OUTER join under insert-only source deltas —
     * the case the append-only rewrite correctly refuses (see
@@ -345,7 +339,7 @@ object Ivm {
     * ([[joinSplicing]]): a view row derives from one left row and the
     * right rows of ITS key, so `view′ = view ▷ touched ∪all
     * (A ⋉ touched) ⟕ (B ⋉ touched)` with touched = δA's `lk` ∪ δB's `rk`
-    * — one query, no pins. The pair above is built only when read.
+    * — one query. The weighted frame above is built only when read.
     */
   def deltaLeftJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
@@ -360,7 +354,7 @@ object Ivm {
         .join(baseOf(r), cond, "left_anti")
         .join(delta(r), cond, "left_semi")
         .select(org.apache.spark.sql.functions.col("*") +: nullRight: _*)
-      signed(inserts, retracts)
+      signedNet(inserts, retracts)
     }(None, joinSplicing(l, r, cond, "left", dl, dr))
   }
 
@@ -385,7 +379,6 @@ object Ivm {
     */
   def deltaFullJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
-    import org.apache.spark.sql.functions.{col, lit}
     val (lFull, rFull) = (left.toDF(), right.toDF())
     val (dl, dr) = (delta(lFull), delta(rFull))
     SignedDelta.deferred {
@@ -407,7 +400,7 @@ object Ivm {
           .join(baseOf(lFull), cond, "left_anti")
           .join(delta(lFull), cond, "left_semi")
           .select(nullLeft ++ rCols: _*))
-      signed(inserts, retracts)
+      signedNet(inserts, retracts)
     }(None, joinSplicing(lFull, rFull, cond, "full", dl, dr))
   }
 
@@ -417,10 +410,9 @@ object Ivm {
     */
   def deltaRightJoin(left: Dataset[_], right: Dataset[_],
       cond: org.apache.spark.sql.Column): SignedDelta = {
-    import org.apache.spark.sql.functions.col
     val order = (left.toDF().columns ++ right.toDF().columns).toSeq.map(col)
     // a pure reorder: the mirrored splice (matched by name) carries over
-    deltaLeftJoin(right, left, cond).map(_.select(order: _*), _ => true)
+    deltaLeftJoin(right, left, cond).map(SignedDelta.select(_, order), _ => true)
   }
 
   /** Signed delta of a LEFT ANTI join ("A rows with NO match in B") under
@@ -444,7 +436,7 @@ object Ivm {
       val retracts = baseOf(l)
         .join(baseOf(r), cond, "left_anti")
         .join(delta(r), cond, "left_semi")
-      signed(inserts, retracts)
+      signedNet(inserts, retracts)
     }(None, joinSplicing(l, r, cond, "left_anti", dl, dr))
   }
 
@@ -459,21 +451,17 @@ object Ivm {
     * keyed in the view by `lk` ("left", "left_anti") or by
     * `coalesce(lk, rk)` ("full": a null-extended side's key is NULL).
     * Matching is null-safe, so a NULL key recomputes its own rows, which
-    * an `=` condition leaves unmatched. None (the pair form) when no
+    * an `=` condition leaves unmatched. None (the weighted form) when no
     * conjunct equates a plain column of each side of one type, or column
     * names repeat across the sides (the splice keys by name).
     */
   private def joinSplicing(left: DataFrame, right: DataFrame, cond: Column,
       how: String, dl: DataFrame, dr: DataFrame): Option[Splicing] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualNullSafe, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualNullSafe, EqualTo}
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    import org.apache.spark.sql.functions.{coalesce, col}
-    val names = (left.columns ++ right.columns).map(_.toLowerCase)
-    if (names.distinct.length != names.length) return None
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(a, b) => conjuncts(a) ++ conjuncts(b)
-      case other => Seq(other)
-    }
+    import org.apache.spark.sql.functions.coalesce
+    val all = (left.columns ++ right.columns).map(_.toLowerCase)
+    if (all.distinct.length != all.length) return None
     val key = GraftSql.analyzed(left.join(right, cond, "inner")) match {
       case Join(l, r, _, Some(c), _) =>
         def sides(a: Attribute, b: Attribute) =
@@ -550,7 +538,7 @@ object Ivm {
     val inserts = delta(l).distinct().except(baseOf(l)).except(align(right.toDF()))
     val retracts = align(delta(right)).distinct()
       .intersect(baseOf(l)).except(align(baseOf(right)))
-    signed(inserts, retracts)
+    signedNet(inserts, retracts)
   }
 
   /** One maintenance step of a TOP-K view (`ORDER BY … LIMIT k`): top-k
@@ -621,11 +609,11 @@ object Ivm {
   def groupTopKMerge(prev: DataFrame, deltaRows: DataFrame,
       keys: Seq[String], order: Seq[Column], k: Int): DataFrame = {
     import org.apache.spark.sql.{functions => F}
-    val dTop = pinSmall(groupTopK(deltaRows, keys, order, k))
-    // every reuse beyond the first gets its own ExprIds ([[signed]]'s
+    val dTop = groupTopK(deltaRows, keys, order, k)
+    // every reuse beyond the first gets its own ExprIds ([[signedNet]]'s
     // hazard): prev feeds both split arms and dTop feeds both touched-key
-    // sets plus the merge union — with pinning disabled (or a lazy caller
-    // frame) the repeated non-leaf subtrees otherwise mis-bind
+    // sets plus the merge union — the repeated non-leaf subtrees otherwise
+    // mis-bind
     def touched(df: DataFrame): DataFrame =
       F.broadcast(df.select(keys.map(F.col): _*).distinct())
     // using-column joins emit the keys FIRST: re-project both split arms
@@ -653,16 +641,16 @@ object Ivm {
       order: Seq[Column], k: Int): SignedDelta = {
     import org.apache.spark.sql.{functions => F}
     val src = source.toDF()
-    val dTop = pinSmall(groupTopK(delta(src), keys, order, k))
+    val dTop = groupTopK(delta(src), keys, order, k)
     val touched =
       F.broadcast(reMint(dTop).select(keys.map(F.col): _*).distinct())
     // re-project the semi-join's key-first column order back to the
     // source's, so the signed frames difference positionally against any
     // view derived from the source (applyTo / the identity spec)
     val outCols = src.columns.toSeq.map(F.col)
-    val affected = pinSmall(groupTopK(
+    val affected = groupTopK(
       baseOf(src).join(touched, keys, "left_semi"), keys, order, k)
-      .select(outCols: _*))
+      .select(outCols: _*)
     val merged = groupTopK(reMint(affected).unionByName(dTop), keys, order, k)
     signedNet(merged, reMint(affected))
   }
@@ -676,8 +664,9 @@ object Ivm {
     *   inserts  = IvmAgg.merge(affected, δ partial)                — new rows
     *   retracts = affected
     *
-    * netted ([[signedNet]]) so groups whose value did not change (a min
-    * the delta never beat, a sum advanced by zero) produce no traffic.
+    * as one weighted frame ([[signedNet]]): a group whose value did not
+    * change (a min the delta never beat, a sum advanced by zero) cancels
+    * when it is netted.
     * Unlike the key-scoped rung this NEVER re-aggregates source rows:
     * the δ partial aggregates only the pruned delta scan and `affected` is
     * a keyed lookup into the materialized view (here expressed as a
@@ -691,13 +680,10 @@ object Ivm {
     */
   def deltaAgg(view: DataFrame, q: Dataset[_]): SignedDelta = {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project}
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val ad0 = IvmAgg.deltaPartial(q)
+    import org.apache.spark.sql.functions.broadcast
+    val ad = IvmAgg.deltaPartial(q)
     SignedDelta.deferred {
-      // the δ partial feeds both the affected-key probe and the merge;
-      // the affected view feeds both signed frames — pin each once
-      val ad = ad0.copy(partial = pinSmall(ad0.partial))
-      val affected = pinSmall(
+      val affected =
         if (ad.keys.isEmpty) view // global aggregate: the single row
         else {
           val affKeys = reMint(ad.partial.select(ad.keys.map(k =>
@@ -705,16 +691,16 @@ object Ivm {
           val cond = ad.keys.map(k => col(k) <=> col(s"__aff_$k"))
             .reduce(_ && _)
           view.join(broadcast(affKeys), cond, "left_semi")
-        })
+        }
       signedNet(IvmAgg.merge(affected, ad), reMint(affected))
     } {
       // only groups with δ rows change: the δ rows' group keys cover both
       // frames without the view probe, the merge, the net — or the
       // partial's own aggregation (a shuffle)
       GraftSql.analyzed(q) match {
-        case Aggregate(_, aggExprs, child, _) if ad0.keys.nonEmpty =>
-          val keyOuts = ad0.keys.flatMap(k => aggExprs.find(_.name == k))
-          if (keyOuts.size != ad0.keys.size) None
+        case Aggregate(_, aggExprs, child, _) if ad.keys.nonEmpty =>
+          val keyOuts = ad.keys.flatMap(k => aggExprs.find(_.name == k))
+          if (keyOuts.size != ad.keys.size) None
           else try Some(delta(GraftSql.ofRows(q.sparkSession,
             Project(keyOuts, child))))
           catch { case _: UnsupportedOperationException => None }
@@ -756,8 +742,8 @@ object Ivm {
     * `applyTo` does not difference: when every key surfaces in the view
     * as a scan's own column, it splices `view ▷ aff ∪all Q(source ⋉ aff)`
     * — the restricted full recompute replaces the affected keys' stored
-    * rows, and the base recompute and the net never run. The pair is
-    * built (netted and pinned) only when `inserts`/`retracts` are read.
+    * rows, and the base recompute and the net never run. The weighted
+    * frame is built only when it, `inserts` or `retracts` is read.
     */
   def deltaKeyScoped(q: DataFrame => DataFrame, source: Dataset[_],
       keys: Seq[String]): SignedDelta = {
@@ -766,80 +752,30 @@ object Ivm {
       GraftSql.analyzed(q(source.toDF())), keys)
   }
 
-  /** The signed multiset difference of two same-schema frames — inserts =
-    * plus ∖all minus, retracts = minus ∖all plus — computed as ONE
-    * signed-count aggregation (±1 tags, group by every column, replicate
-    * by the net count) instead of two `exceptAll`s. Besides halving the
-    * shuffles, this avoids nesting Except nodes: Spark's EXCEPT ALL
-    * rewrite mis-binds when one Except subtree appears inside another with
-    * shared lineage (even `d.exceptAll(d)` on an exceptAll-built `d`
-    * returns rows), which is exactly how callers compose a SignedDelta —
-    * `view.unionByName(inserts).exceptAll(retracts)`.
-    */
-  private def signedNet(plus: DataFrame, minus: DataFrame): SignedDelta = {
-    import org.apache.spark.sql.{Column, functions => F}
-    val cols = plus.columns.toSeq
-    require(!cols.exists(_.startsWith("__graft_")),
-      "__graft_ column names are reserved")
-    def tag(df: DataFrame, s: Long): DataFrame =
-      df.select(cols.map(F.col) :+ F.lit(s).as("__graft_sign"): _*)
-    def replicate(df: DataFrame, n: Column): DataFrame =
-      df.withColumn("__graft_i", F.explode(F.sequence(F.lit(1L), n)))
-        .select(cols.map(F.col): _*)
-    val pinOn = plus.sparkSession.conf
-      .get("spark.graft.ivm.pinSignedNet", "true").toBoolean
-    // built on first read; the un-netted pair already covers the change
-    SignedDelta.deferred(if (pinOn) {
-      // ONE net aggregation for both directions (guide §2.4): the net
-      // frame is pinned to a LogicalRDD leaf, so inserts (`net > 0`) and
-      // retracts (`net < 0`, replicated −net times) are two filters over
-      // the SAME materialized RDD — the exchange-reuse hazard documented
-      // in the else-branch cannot arise (one leaf, not two canonically
-      // identical aggregate subtrees), and the netting runs one
-      // aggregation over |plus|+|minus| rows instead of two. The inputs
-      // are each referenced once, so they no longer need their own pins
-      // (previously: two input pins + two aggregations per signedNet).
-      val net0 = pinSmall(tag(plus, 1L).unionByName(tag(minus, -1L))
-        .groupBy(cols.map(F.col): _*)
-        .agg(F.sum(F.col("__graft_sign")).as("__graft_net")))
-      signed(
-        replicate(net0.filter(F.col("__graft_net") > 0),
-          F.col("__graft_net")),
-        replicate(net0.filter(F.col("__graft_net") < 0),
-          -F.col("__graft_net")))
-    } else {
-      // pinning disabled (tests/Explain auditing the lazy algebra): each
-      // direction gets its OWN net aggregation with its own sign
-      // orientation and an identical `> 0` consumer — so the inserts and
-      // retracts plans are NOT canonicalization-equal. With one shared
-      // orientation and `> 0` / `< 0` filters, Spark's exchange reuse
-      // (spark.sql.exchange.reuse, default on) collided the two arms'
-      // canonically identical aggregate subtrees when a caller composed
-      // both frames into one query, and the retract side returned the
-      // wrong rows (observed: a windowed key-scoped delta's
-      // `inserts ∪ retracts` emitted base rows that net to zero;
-      // disabling exchange reuse fixed it).
-      def net(pos: DataFrame, neg: DataFrame): DataFrame =
-        tag(pos, 1L).unionByName(tag(neg, -1L))
-          .groupBy(cols.map(F.col): _*)
-          .agg(F.sum(F.col("__graft_sign")).as("__graft_net"))
-          .filter(F.col("__graft_net") > 0)
-      signed(replicate(net(plus, minus), F.col("__graft_net")),
-        replicate(net(minus, plus), F.col("__graft_net")))
-    })(Some(plus.unionByName(minus)))
+  /** `e` split on AND. */
+  private def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
+      conjuncts(a) ++ conjuncts(b)
+    case other => Seq(other)
+  }
+
+  /** The names of the plain columns (bare or aliased) among `exprs`. */
+  private def names(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Set[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    exprs.collect {
+      case a: Attribute => a.name
+      case Alias(a: Attribute, name) => name
+    }.toSet
   }
 
   private def requireKeyDecomposable(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       keys: Seq[String]): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, EqualNullSafe, EqualTo, Expression}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, EqualNullSafe, EqualTo}
     import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, GlobalLimit, Join, Project, Window}
-    def names(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
-      exprs.collect {
-        case a: Attribute => a.name
-        case Alias(a: Attribute, name) => name
-      }.toSet
     val need = keys.toSet
     // the walk stops at the source-scan boundary: renames INSIDE the
     // source's own definition (a temp view's stored plan, toDF tuple
@@ -903,10 +839,6 @@ object Ivm {
       // extra conjuncts only narrow within a key partition, so they are
       // fine. Anything else can correlate one key's rows with another's.
       case j: Join =>
-        def conjuncts(e: Expression): Seq[Expression] = e match {
-          case And(l, r) => conjuncts(l) ++ conjuncts(r)
-          case other => Seq(other)
-        }
         def acrossSides(a: Attribute, b: Attribute): Boolean =
           (j.left.outputSet.contains(a) && j.right.outputSet.contains(b)) ||
             (j.right.outputSet.contains(a) && j.left.outputSet.contains(b))
@@ -946,8 +878,10 @@ object Ivm {
     * differencing. Every query the engine
     * can run is maintainable through this entry point; the returned case
     * tells the caller how to apply the result (append / merge / signed
-    * upsert / diff-apply), and WHICH rung it got — so the cost cliff
-    * between the incremental rungs and the recompute rung stays visible.
+    * upsert / recompute — [[DiffRows]] carries only the insert half, so a
+    * view whose change can retract is overwritten with the query), and
+    * WHICH rung it got — so the cost cliff between the incremental rungs
+    * and the recompute rung stays visible.
     *
     * Top-k caveat: a root `ORDER BY plain columns LIMIT k` routes to the
     * top-k merge rung, whose correctness needs a TOTAL order (include a
@@ -970,8 +904,7 @@ object Ivm {
     }
 
   private def signedOrDiff(df: Dataset[_]): AutoMaintenance = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Except, Intersect, Join}
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter, RightOuter}
+    import org.apache.spark.sql.catalyst.plans.logical.Intersect
     val spark = df.sparkSession
     GraftSql.analyzed(df) match {
       // set ops at the root: INTERSECT is monotone (append-only rung),
@@ -979,65 +912,52 @@ object Ivm {
       case Intersect(l, r, false) =>
         AppendDelta(deltaIntersect(
           GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r)))
-      case Except(l, r, false) =>
-        ApplySigned(deltaExcept(
-          GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r)))
-      case Join(l, r, LeftOuter, Some(cond), _) =>
-        ApplySigned(deltaLeftJoin(
-          GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-          GraftSql.column(cond)))
-      case Join(l, r, RightOuter, Some(cond), _) =>
-        ApplySigned(deltaRightJoin(
-          GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-          GraftSql.column(cond)))
-      case Join(l, r, FullOuter, Some(cond), _) =>
-        ApplySigned(deltaFullJoin(
-          GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-          GraftSql.column(cond)))
-      case Join(l, r, LeftAnti, Some(cond), _) =>
-        ApplySigned(deltaAntiJoin(
-          GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-          GraftSql.column(cond)))
       case plan =>
         // deterministic row-wise tops over a signed-rung core commute
-        // with the insert/retract pair — peel them so projected/filtered
+        // with the signed change — peel them so projected/filtered
         // outer-join and set-difference VIEWS maintain signed instead of
         // differencing (the condition re-resolves BY NAME against the
         // peeled core's frames, so it needs unique names — peelRowwise
         // already requires that)
-        lazy val peeled: Option[AutoMaintenance] = {
+        lazy val peeled = {
           val (core, post) = peelRowwise(plan)
           if (post.isEmpty) None
-          else core match {
-            case Join(l, r, LeftOuter, Some(cond), _) =>
-              Some(ApplySigned(applyPost(deltaLeftJoin(
-                GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-                GraftSql.column(cond)), post)))
-            case Join(l, r, RightOuter, Some(cond), _) =>
-              Some(ApplySigned(applyPost(deltaRightJoin(
-                GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-                GraftSql.column(cond)), post)))
-            case Join(l, r, FullOuter, Some(cond), _) =>
-              Some(ApplySigned(applyPost(deltaFullJoin(
-                GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-                GraftSql.column(cond)), post)))
-            case Join(l, r, LeftAnti, Some(cond), _) =>
-              Some(ApplySigned(applyPost(deltaAntiJoin(
-                GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r),
-                GraftSql.column(cond)), post)))
-            case Except(l, r, false) =>
-              Some(ApplySigned(applyPost(deltaExcept(
-                GraftSql.ofRows(spark, l), GraftSql.ofRows(spark, r)), post)))
-            case _ => None
-          }
+          else joinOrExcept(spark, core).map(applyPost(_, post))
         }
-        aggJoinAuto(df).map(ApplySigned(_))
+        joinOrExcept(spark, plan)
+          .orElse(aggJoinAuto(df))
           .orElse(peeled)
-          .orElse(aggOverSignedAuto(df).map(ApplySigned(_)))
-          .orElse(topKAuto(df).map(ApplySigned(_)))
-          .orElse(keyScopedAuto(df).map(ApplySigned(_)))
-          .orElse(aggGroupScopedAuto(df).map(ApplySigned(_)))
+          .orElse(aggOverSignedAuto(df))
+          .orElse(topKAuto(df))
+          .orElse(keyScopedAuto(df))
+          .orElse(aggGroupScopedAuto(df))
+          .map(ApplySigned(_))
           .getOrElse(DiffRows(deltaByDiff(df)))
+    }
+  }
+
+  /** The signed rung of an outer or anti join or a set EXCEPT at `p`'s
+    * root, if it is one.
+    */
+  private def joinOrExcept(spark: org.apache.spark.sql.SparkSession,
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[SignedDelta] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Except, Join}
+    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter, RightOuter}
+    def side(x: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      GraftSql.ofRows(spark, x)
+    p match {
+      case Except(l, r, false) => Some(deltaExcept(side(l), side(r)))
+      case Join(l, r, how, Some(cond), _) =>
+        val c = GraftSql.column(cond)
+        how match {
+          case LeftOuter => Some(deltaLeftJoin(side(l), side(r), c))
+          case RightOuter => Some(deltaRightJoin(side(l), side(r), c))
+          case FullOuter => Some(deltaFullJoin(side(l), side(r), c))
+          case LeftAnti => Some(deltaAntiJoin(side(l), side(r), c))
+          case _ => None
+        }
+      case _ => None
     }
   }
 
@@ -1045,13 +965,13 @@ object Ivm {
     * child maintains through any SIGNED rung — aggregate over agg-join,
     * over set difference, over top-k — the F-IVM-style composition one
     * level above [[aggJoinAuto]]. For child' = child − R + I, every
-    * group's counts and sums advance by ONE sign-weighted partial
+    * group's counts and sums advance by ONE partial over the child's
+    * weighted frame (weight w per row, un-netted: both are linear in w)
     *
-    *   P = γ_keys( (I × +1) ⊎ (R × −1) ):
-    *     count(x) → Σ sign·[x IS NOT NULL],   sum(x) → Σ sign·x
+    *   P = γ_keys(δchild):
+    *     count(x) → Σ w·[x IS NOT NULL],   sum(x) → Σ w·x
     *
-    * and view' = view ⊕ P groupwise (plain addition — the weighted
-    * partial already nets inserts against retracts); groups whose
+    * and view' = view ⊕ P groupwise (plain addition); groups whose
     * count(*) tracker reaches 0 drop. The envelope is enforced honestly:
     *   - sum/count only (min/max are NOT subtractable — a retracted max
     *     needs the runner-up the view no longer has), no DISTINCT, no
@@ -1064,42 +984,26 @@ object Ivm {
     *     without a per-column non-null count the view does not carry —
     *     the classic higher-order-IVM caveat, rejected statically here.
     * Scale shape matches [[deltaAgg]]: P aggregates only the child's
-    * (small) signed frames, the view lookup is a broadcast-semi keyed
+    * (small) weighted frame, the view lookup is a broadcast-semi keyed
     * probe, and the base corpus is never re-aggregated at either level.
     */
   private def aggOverSignedAuto(df: Dataset[_]): Option[SignedDelta] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression => CExpr}
+    import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum, when}
-
-    val spark = df.sparkSession
-    def strip(e: CExpr): Column = GraftSql.column(e.transform {
-      case a: AttributeReference => UnresolvedAttribute(a.name)
-    })
+    import org.apache.spark.sql.functions.{broadcast, coalesce, when}
 
     GraftSql.analyzed(df) match {
       case Aggregate(groupExprs, aggExprs, child, _) if groupExprs.nonEmpty =>
         val cNames = child.output.map(_.name)
         if (cNames.distinct.size != cNames.size) return None
-
-        // each grouping expression must surface as a named output (the
-        // merge and the signed frames key by NAME)
-        val keyNames: Seq[String] = groupExprs.map {
-          case a: Attribute => aggExprs.collectFirst {
-            case o: Attribute if o.exprId == a.exprId => o.name
-            case Alias(o: Attribute, name) if o.exprId == a.exprId => name
-          }.getOrElse(return None)
-          case e => aggExprs.collectFirst {
-            case Alias(c, name) if c.semanticEquals(e) => name
-          }.getOrElse(return None)
-        }
+        // the merge and the weighted frame key by NAME
+        val keyNames = groupKeyNames(groupExprs, aggExprs).getOrElse(return None)
 
         // classify outputs: group keys pass through; everything else must
-        // be a subtractable aggregate, re-expressed sign-weighted
+        // be a subtractable aggregate, re-expressed weight-scaled
         var tracker: Option[String] = None
-        val weighted: Seq[Column] = aggExprs.flatMap {
+        val scaled: Seq[Column] = aggExprs.flatMap {
           case ne if keyNames.contains(ne.name) => None
           case Alias(ae: AggregateExpression, name)
               if !ae.isDistinct && ae.filter.isEmpty =>
@@ -1114,41 +1018,30 @@ object Ivm {
                 // mis-track group liveness and drop live groups at 0.
                 if (c.children.forall(!_.nullable) && tracker.isEmpty)
                   tracker = Some(name)
-                val live = c.children.map(ch => strip(ch).isNotNull)
+                val live = c.children.map(ch => byName(ch).isNotNull)
                   .reduceOption(_ && _).getOrElse(lit(true))
-                Some(sum(when(live, col("__graft_w")).otherwise(lit(0L)))
+                Some(sum(when(live, col(SignedDelta.W)).otherwise(lit(0L)))
                   .cast("long").as(name))
               case s: Sum if !s.child.nullable =>
-                Some(sum(strip(s.child) * col("__graft_w")).as(name))
+                Some(sum(byName(s.child) * col(SignedDelta.W)).as(name))
               case _ => return None // min/max/avg/nullable sum: not here
             }
           case _ => return None
         }
         if (tracker.isEmpty) return None // need a count(*) liveness column
 
-        val childDf = GraftSql.ofRows(spark, child)
-        val childSd: SignedDelta =
-          (try Some(SignedDelta(delta(childDf), childDf.limit(0).toDF()))
-          catch {
-            case _: UnsupportedOperationException =>
-              (try Some(deltaAgg(baseOf(childDf), childDf))
-              catch { case _: UnsupportedOperationException => None })
-                .orElse(aggJoinAuto(childDf))
-                .orElse(topKAuto(childDf))
-                .orElse(keyScopedAuto(childDf))
-          }).getOrElse(return None)
+        val childDf = GraftSql.ofRows(df.sparkSession, child)
+        val childSd = childStep(childDf)(aggJoinAuto(childDf)
+          .orElse(topKAuto(childDf))
+          .orElse(keyScopedAuto(childDf))).getOrElse(return None)
 
         val keyCols = groupExprs.zip(keyNames).map { case (e, n) =>
-          strip(e).as(n)
+          byName(e).as(n)
         }
-        // the sign-weighted partial feeds the affected-key probe, the
-        // merge, and (via pKeys) the retract frame — pin once; it is
-        // |touched-groups|-sized by construction
-        val partial = pinSmall(
-          childSd.inserts.withColumn("__graft_w", lit(1L))
-            .unionByName(childSd.retracts.withColumn("__graft_w", lit(-1L)))
-            .groupBy(keyCols: _*)
-            .agg(weighted.head, weighted.tail: _*))
+        // the partial over the child's weighted frame, un-netted: every
+        // output is linear in the weights
+        val partial = childSd.weighted.groupBy(keyCols: _*)
+          .agg(scaled.head, scaled.tail: _*)
 
         // the maintained view (base recompute stands in for the stored
         // view, as in deltaAgg) probed by the touched-group keys
@@ -1157,8 +1050,7 @@ object Ivm {
           col(k).as(s"__aff_$k")): _*))
         val affCond = keyNames.map(k => col(k) <=> col(s"__aff_$k"))
           .reduce(_ && _)
-        val affected =
-          pinSmall(view.join(broadcast(pKeys), affCond, "left_semi"))
+        val affected = view.join(broadcast(pKeys), affCond, "left_semi")
 
         // view ⊕ P groupwise through the one-exchange key-aligned combine
         // (IvmAgg.alignByKeys) — both sides are ≤ 1 row per key, so the
@@ -1180,6 +1072,46 @@ object Ivm {
     }
   }
 
+  /** `e` re-resolved by name (for plans whose ExprIds are re-minted). */
+  private def byName(
+      e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    GraftSql.column(stripRefs(e))
+
+  /** The output name of each grouping expression of an aggregate — None
+    * when one does not surface as a named output (the aggregate rungs key
+    * their frames and the stored view by name).
+    */
+  private def groupKeyNames(
+      groupExprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      aggExprs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression])
+      : Option[Seq[String]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    val names = groupExprs.map {
+      case a: Attribute => aggExprs.collectFirst {
+        case o: Attribute if o.exprId == a.exprId => o.name
+        case Alias(o: Attribute, name) if o.exprId == a.exprId => name
+      }
+      case e => aggExprs.collectFirst {
+        case Alias(c, name) if c.semanticEquals(e) => name
+      }
+    }
+    if (names.forall(_.isDefined)) Some(names.flatten) else None
+  }
+
+  /** An aggregate rung's child, stepped through the append-only envelope,
+    * then the merge-partial aggregate, then `signed` (the rung's choice of
+    * signed rungs).
+    */
+  private def childStep(childDf: DataFrame)(
+      signed: => Option[SignedDelta]): Option[SignedDelta] =
+    try Some(SignedDelta.appendOnly(delta(childDf)))
+    catch {
+      case _: UnsupportedOperationException =>
+        (try Some(deltaAgg(baseOf(childDf), childDf))
+        catch { case _: UnsupportedOperationException => None })
+          .orElse(signed)
+    }
+
   /** GROUP-SCOPED recompute (r7): grouped aggregates OUTSIDE the
     * subtractable envelope — min/max (a retracted max needs the runner-up
     * the view no longer has), avg, DISTINCT, FILTER clauses — over a
@@ -1197,25 +1129,19 @@ object Ivm {
     * (cheap partials win when they apply) and below scan-level key
     * scoping (restriction at the parquet scan prunes more than
     * restriction above the child). `applyTo` is that one query: the
-    * stored view supplies every untouched group, and no net aggregate or
-    * pin runs. `inserts`/`retracts` (read by oracles and tests) are the
-    * same restriction netted on first read, with a base recompute
+    * stored view supplies every untouched group, and no net aggregate
+    * runs. The weighted frame (read by oracles and tests through
+    * `inserts`/`retracts`) is the same restriction, with a base recompute
     * standing in for the stored view. (The child recompute under the
     * restriction reads the child's inputs — in production the child of a
     * second-level aggregate is itself a materialized view, making that
     * read |touched|-sized too.)
     */
   private def aggGroupScopedAuto(df: Dataset[_]): Option[SignedDelta] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, SubqueryExpression, Expression => CExpr}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, SubqueryExpression}
     import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    import org.apache.spark.sql.functions.col
 
     val spark = df.sparkSession
-    def strip(e: CExpr): Column = GraftSql.column(e.transform {
-      case a: AttributeReference => UnresolvedAttribute(a.name)
-    })
-
     GraftSql.analyzed(df) match {
       case agg @ Aggregate(groupExprs, aggExprs, child, _)
           if groupExprs.nonEmpty =>
@@ -1225,17 +1151,8 @@ object Ivm {
         // nondeterminism and correlated subqueries outright
         if (!(groupExprs ++ aggExprs).forall(e => e.deterministic &&
             !e.exists(_.isInstanceOf[SubqueryExpression]))) return None
-        // each grouping expression must surface as a named output: the
-        // touched-key frame and the view restriction key by NAME
-        val keyNames: Seq[String] = groupExprs.map {
-          case a: Attribute => aggExprs.collectFirst {
-            case o: Attribute if o.exprId == a.exprId => o.name
-            case Alias(o: Attribute, name) if o.exprId == a.exprId => name
-          }.getOrElse(return None)
-          case e => aggExprs.collectFirst {
-            case Alias(c, name) if c.semanticEquals(e) => name
-          }.getOrElse(return None)
-        }
+        // the touched-key frame and the view restriction key by NAME
+        val keyNames = groupKeyNames(groupExprs, aggExprs).getOrElse(return None)
         if (keyNames.distinct.size != keyNames.size) return None
 
         // the child's own signed step, through whichever rung fits:
@@ -1245,20 +1162,13 @@ object Ivm {
         // falls to differencing gives this rung nothing to scope by —
         // decline and let the root difference once.
         val childDf = GraftSql.ofRows(spark, child)
-        val childSd: SignedDelta =
-          (try Some(SignedDelta(delta(childDf), childDf.limit(0).toDF()))
-          catch {
-            case _: UnsupportedOperationException =>
-              (try Some(deltaAgg(baseOf(childDf), childDf))
-              catch { case _: UnsupportedOperationException => None })
-                .orElse(signedOrDiff(childDf) match {
-                  case ApplySigned(sd) => Some(sd)
-                  case _ => None
-                })
-          }).getOrElse(return None)
+        val childSd = childStep(childDf)(signedOrDiff(childDf) match {
+          case ApplySigned(sd) => Some(sd)
+          case _ => None
+        }).getOrElse(return None)
 
         // the grouping expressions over the child (in keyNames order)
-        val childKeys = groupExprs.map(e => strip(e match {
+        val childKeys = groupExprs.map(e => byName(e match {
           case al: Alias => al.child
           case x => x
         }))
@@ -1279,8 +1189,8 @@ object Ivm {
         val recompute = (restricted: DataFrame) => GraftSql.ofRows(spark,
           agg.copy(child = GraftSql.analyzed(restricted)))
         val resolved = once(Splice.resolve(touched))
-        // the pair: a base recompute stands in for the stored view; a
-        // parent rung scopes by this rung's touched groups
+        // the weighted frame: a base recompute stands in for the stored
+        // view; a parent rung scopes by this rung's touched groups
         Some(SignedDelta.deferred(signedNet(
             recompute(resolved().keep(childDf, childKeys)),
             resolved().keep(baseOf(df), keyNames.map(col))))(
@@ -1291,41 +1201,12 @@ object Ivm {
     }
   }
 
-  /** Auto-detected signed maintenance of an `Aggregate ⋈ other` INNER-join
-    * root — the mid-tree-aggregate promotion (VERDICT r5 #2): the
-    * aggregate side maintains through [[deltaAgg]] (merge algebra, no
-    * source re-aggregation) and the signed pair propagates through the
-    * join. For A' = A − R + I (the aggregate side's signed step) and
-    * B' = B ∪all δB (the other side, inside the insert-only envelope):
-    *
-    *   A'⋈B' − A⋈B = I⋈B − R⋈B + A'⋈δB
-    *
-    * so  inserts  = I ⋈ baseB  ∪all  merged-view ⋈ δB
-    *     retracts = R ⋈ baseB
-    *
-    * — every term is delta-keyed: I/R are the changed-group rows, δB is
-    * the pruned other-side delta, and the only base-side reads are the
-    * view lookup inside [[deltaAgg]] and baseB probed BY the small I/R
-    * sides (at 100 TB: broadcast I/R against the dim, never a corpus
-    * shuffle). A static (unregistered) other side degenerates to
-    * `I⋈B ∪ ∅ / R⋈B`. Unlike the key-scoped rung this does not require
-    * the join to be ON the group keys. Requirements for the auto route:
-    * INNER join with a condition, disjoint+unique column names across the
-    * sides (the signed frames re-join by name), mergeable aggregate
-    * ([[IvmAgg]] envelope), other side inside the delta envelope; anything
-    * else falls through to the next rung. The aggregate may sit on either
-    * side (output column order is preserved). Deterministic Project/Filter
-    * tops above the join — `agg.join(dim).select(...)`, HAVING-style
-    * `agg.filter(...)`, including over a BARE aggregate root — are peeled
-    * and re-applied to both signed frames (row-wise operators commute with
-    * the insert/retract pair).
-    */
   // ---- row-wise-top peeling (shared by the signed rungs) ---------------
   //
   // Row-wise operators ABOVE a maintainable core commute with the signed
-  // pair — A' = A − R + I implies f(A') = f(A) − f(R) + f(I) for any
+  // change — A' = A − R + I implies f(A') = f(A) − f(R) + f(I) for any
   // deterministic per-row f — so deterministic Project/Filter tops are
-  // PEELED and re-applied (by name) to both signed frames. This is what
+  // PEELED and re-applied (by name) to the weighted frame. This is what
   // routes `agg.join(dim).select(...)`, HAVING-style `agg.filter(...)`,
   // and projected/filtered outer-join views through their signed rungs
   // instead of differencing.
@@ -1356,18 +1237,17 @@ object Ivm {
         child.output.map(_.name).distinct.size == child.output.size
     p match {
       case Project(exprs, child) if peelable(exprs, child) =>
-        val cols = exprs.map(ne => GraftSql.column(stripRefs(ne)))
+        val cols = exprs.map(byName)
         val (inner, fs) = peelRowwise(child)
         def keeps(n: String) = exprs.count(_.name == n) == 1 && exprs.exists {
           case a: Attribute => a.name == n
           case Alias(a: Attribute, m) => m == n && a.name == n
           case _ => false
         }
-        (inner, fs :+ Rowwise(_.select(cols: _*), keeps))
+        (inner, fs :+ Rowwise(SignedDelta.select(_, cols), keeps))
       case Filter(cond, child) if peelable(Seq(cond), child) =>
-        val c = GraftSql.column(stripRefs(cond))
         val (inner, fs) = peelRowwise(child)
-        (inner, fs :+ Rowwise(_.filter(c), _ => true))
+        (inner, fs :+ Rowwise(_.filter(byName(cond)), _ => true))
       case other => (other, Nil)
     }
   }
@@ -1377,7 +1257,6 @@ object Ivm {
     * a row of any input still appears, projected to the common columns.
     */
   private def unionOnCommon(frames: Seq[DataFrame]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.col
     val common = frames.map(_.columns.toSeq)
       .reduce((a, b) => a.filter(b.contains))
     if (common.isEmpty) None
@@ -1388,23 +1267,48 @@ object Ivm {
   private def applyPost(sd: SignedDelta, post: List[Rowwise]): SignedDelta =
     post.foldLeft(sd)((acc, r) => acc.map(r.f, r.keeps))
 
+  /** Auto-detected signed maintenance of an `Aggregate ⋈ other` INNER-join
+    * root — the mid-tree-aggregate promotion (VERDICT r5 #2): the
+    * aggregate side maintains through [[deltaAgg]] (merge algebra, no
+    * source re-aggregation) and its weighted change propagates through
+    * the join. For A' = A + δA (the aggregate side's signed step) and
+    * B' = B + δB (the other side's):
+    *
+    *   A'⋈B' − A⋈B = δA⋈B + A'⋈δB
+    *
+    * one weighted frame, each arm weighed by its δ side — every term is
+    * delta-keyed: δA is the changed-group rows, δB the pruned other-side
+    * delta, and the only base-side reads are the view lookup inside
+    * [[deltaAgg]] and B probed BY the small δA side (at 100 TB: broadcast
+    * δA against the dim, never a corpus shuffle). δB is empty for a
+    * static (unregistered) other side, weighs +1 per row inside the
+    * insert-only envelope, and is the other side's own [[deltaAgg]] step
+    * when it is itself a (peeled) mergeable aggregate — the agg⋈agg case.
+    * Unlike the key-scoped rung this does not require the join to be ON
+    * the group keys. Requirements for the auto route: INNER join with a
+    * condition, disjoint+unique column names across the sides (the
+    * weighted frames re-join by name), mergeable aggregate ([[IvmAgg]]
+    * envelope), other side one of the three above; anything else falls
+    * through to the next rung. The aggregate may sit on either side
+    * (output column order is preserved). Deterministic Project/Filter
+    * tops above the join — `agg.join(dim).select(...)`, HAVING-style
+    * `agg.filter(...)`, including over a BARE aggregate root — are peeled
+    * and re-applied to the weighted frame (row-wise operators commute
+    * with the signed change).
+    */
   private def aggJoinAuto(df: Dataset[_]): Option[SignedDelta] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression => CExpr, SubqueryExpression}
     import org.apache.spark.sql.catalyst.plans.Inner
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project}
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
     val spark = df.sparkSession
-    def peel(p: LogicalPlan) = peelRowwise(p)
 
     def build(aggSide: LogicalPlan, other: LogicalPlan,
         cond: org.apache.spark.sql.catalyst.expressions.Expression,
         aggLeft: Boolean): Option[SignedDelta] = {
       // the aggregate side may itself carry row-wise tops
       // (`agg.filter(having).join(dim)`): peel them side-locally — the
-      // signed pair commutes, and the peeled transforms restore exactly
+      // signed change commutes, and the peeled transforms restore exactly
       // the output names the join condition references
-      val (sideCore, sideFs) = peel(aggSide)
+      val (sideCore, sideFs) = peelRowwise(aggSide)
       val agg = sideCore match {
         case a: Aggregate => a
         case _ => return None
@@ -1422,100 +1326,57 @@ object Ivm {
         // the analyzed condition binds to the original plan's ExprIds; the
         // signed frames are re-minted, so the join must re-resolve BY NAME
         // (names are disjoint and unique — checked above)
-        val byName = GraftSql.column(cond.transform {
-          case a: AttributeReference => UnresolvedAttribute(a.name)
-        })
+        val on = byName(cond)
         val sd = applyPost(deltaAgg(baseOf(aggDf), aggDf), sideFs)
         val oHasDelta = PosDeltaRule.deltaSourceScans(other)
           .exists(ResolvePosDeltaScan.isRegistered)
         val oBase = if (oHasDelta) baseOf(oDf) else oDf
-        // referenced up to twice (insert + retract arms of the Signed
-        // case) and |groups|-sized — pin once
-        lazy val aFull = pinSmall(sideFs.foldLeft(
+        lazy val aFull = sideFs.foldLeft(
           IvmAgg.merge(baseOf(aggDf), IvmAgg.deltaPartial(aggDf)))(
-          (d, r) => r.f(d)))
-        // the other side's own step, three ways: STATIC (no registered
-        // source below it — the A'⋈δB term vanishes), INSERT-ONLY (the
-        // envelope rewrite applies — one extra insert arm), or SIGNED
-        // (the other side is ITSELF a peeled mergeable aggregate — the
-        // agg⋈agg case; its insert/retract pair both propagate through
-        // A'). Anything else aborts the rung (→ key-scoped/differencing).
-        sealed trait OtherStep
-        object Static extends OtherStep
-        final case class InsertOnly(rows: DataFrame) extends OtherStep
-        final case class Signed(osd: SignedDelta) extends OtherStep
-        val oStep: OtherStep =
-          if (!oHasDelta) Static
-          else try InsertOnly(delta(oDf))
+          (d, r) => r.f(d))
+        // the other side's own step (see the doc); anything else aborts
+        // the rung (→ key-scoped/differencing)
+        val oStep: Option[SignedDelta] =
+          if (!oHasDelta) None
+          else try Some(SignedDelta.appendOnly(delta(oDf)))
           catch {
             case _: UnsupportedOperationException =>
-              val (oCore, oFs) = peel(other)
+              val (oCore, oFs) = peelRowwise(other)
               val oAgg = oCore match {
                 case a: Aggregate => a
                 case _ => return None
               }
               val oCoreDf = GraftSql.ofRows(spark, oAgg)
-              Signed(applyPost(deltaAgg(baseOf(oCoreDf), oCoreDf), oFs))
+              Some(applyPost(deltaAgg(baseOf(oCoreDf), oCoreDf), oFs))
           }
-        // Δ(A⋈B) = δA⋈B + A'⋈δB  (A' = the merged full agg view): with a
-        // signed δB = Ib − Rb the second term splits by sign, so Rb rows
-        // retract their A'-joined tuples — exactly the agg⋈agg algebra
-        def build: SignedDelta = {
-          val inserts0 = sd.inserts.join(oBase, byName, "inner")
-          val retracts0 = sd.retracts.join(reMint(oBase), byName, "inner")
-          oStep match {
-            case Static =>
-              signed(inserts0.select(outOrder: _*),
-                retracts0.select(outOrder: _*))
-            case InsertOnly(rows) =>
-              // arms are disjoint by construction (I vs R groups net
-              // inside deltaAgg; δB rows exist in no base-joined arm) —
-              // no netting
-              signed(
-                inserts0.unionByName(aFull.join(rows, byName, "inner"))
-                  .select(outOrder: _*),
-                retracts0.select(outOrder: _*))
-            case Signed(osd) =>
-              // a key changed on BOTH sides emits cancelling pairs across
-              // arms (Ia⋈B also appears as A'⋈Rb): net the final pair so
-              // the delta is the minimal signed difference
-              signedNet(
-                inserts0.unionByName(aFull.join(osd.inserts, byName, "inner"))
-                  .select(outOrder: _*),
-                retracts0.unionByName(
-                  reMint(aFull).join(osd.retracts, byName, "inner"))
-                  .select(outOrder: _*))
-          }
-        }
+        def build = weightedDelta(
+          (sd.weighted.join(oBase, on, "inner") +:
+            oStep.toSeq.map(o => aFull.join(o.weighted, on, "inner")))
+            .map(_.select(outOrder :+ col(SignedDelta.W): _*))
+            .reduce(_ unionByName _))
         // the change cover, from δ-sized frames only: the aggregate side's
-        // cover joined to the other side's base (the δA⋈B arms), plus the
-        // other side's own change on its columns (the A'⋈δB arms — A'
+        // cover joined to the other side's base (the δA⋈B arm), plus the
+        // other side's own change on its columns (the A'⋈δB arm — A'
         // itself is never read). None when the join needs columns the
         // aggregate side's cover lacks.
         def cover: Option[DataFrame] = {
           val aCover = sd.touched
           val refs = cond.references.map(_.name).toSet
           if (!refs.subsetOf((aCover.columns ++ oNames).toSet)) None
-          else {
-            val joined = aCover.join(reMint(oBase), byName, "inner")
-            unionOnCommon(joined +: (oStep match {
-              case Static => Nil
-              case InsertOnly(rows) => Seq(rows)
-              case Signed(osd) => Seq(osd.touched)
-            }))
-          }
+          else unionOnCommon(aCover.join(reMint(oBase), on, "inner") +:
+            oStep.map(_.touched).toSeq)
         }
         Some(SignedDelta.deferred(build)(cover))
       } catch { case _: UnsupportedOperationException => None }
     }
 
-    val (core, post) = peel(GraftSql.analyzed(df))
+    val (core, post) = peelRowwise(GraftSql.analyzed(df))
     val sd = core match {
       case Join(l, r, Inner, Some(cond), _) =>
         build(l, r, cond, aggLeft = true)
           .orElse(build(r, l, cond, aggLeft = false))
       // a bare aggregate under the peeled tops (HAVING / projected view):
-      // the signed merge pair, filtered/projected per row
+      // the signed merge step, filtered/projected per row
       case agg: Aggregate if post.nonEmpty =>
         try {
           val aggDf = GraftSql.ofRows(spark, agg)
@@ -1537,7 +1398,6 @@ object Ivm {
   private def topKAuto(df: Dataset[_]): Option[SignedDelta] = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, IntegerLiteral, NullsFirst, NullsLast}
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Sort}
-    import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     GraftSql.analyzed(df) match {
       case GlobalLimit(IntegerLiteral(k),
@@ -1572,17 +1432,12 @@ object Ivm {
     * registered delta source (see [[keyScopedSigned]]).
     */
   private def keyScopedAuto(df: Dataset[_]): Option[SignedDelta] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Window}
     val plan = GraftSql.analyzed(df)
-    def attrNames(exprs: Seq[Expression]): Set[String] = exprs.collect {
-      case a: Attribute => a.name
-      case Alias(a: Attribute, n) => n
-    }.toSet
     val keySets = plan.collect {
-      case w: Window => attrNames(w.partitionSpec)
-      case a: Aggregate => attrNames(a.groupingExpressions)
-      case d: Deduplicate => attrNames(d.keys)
+      case w: Window => names(w.partitionSpec)
+      case a: Aggregate => names(a.groupingExpressions)
+      case d: Deduplicate => names(d.keys)
     }
     if (keySets.isEmpty || keySets.exists(_.isEmpty)) return None
     val keys = keySets.reduce(_ intersect _)
@@ -1608,7 +1463,7 @@ object Ivm {
     * partitions for recompute everywhere. Static scans (not registered in
     * [[DeltaSources]]) read the same rows in both instances — restricting
     * them is not needed for correctness (their non-affected rows cancel in
-    * the difference) but prunes both recomputes AND the net aggregation to
+    * the difference) but prunes both recomputes AND the netting to
     * the affected keys, which is the rung's whole point at scale.
     *
     * The restriction is grafted at the SCAN, as a broadcast semi join
@@ -1630,7 +1485,6 @@ object Ivm {
     import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, Expression}
     import org.apache.spark.sql.catalyst.plans.LeftSemi
     import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.functions.col
     requireKeyDecomposable(plan, keys)
     val scans = PosDeltaRule.deltaSourceScans(plan)
     val deltaScans = scans.filter(ResolvePosDeltaScan.isRegistered)

@@ -40,21 +40,17 @@ object Dedup {
     * shape: a production pipeline STORES the signature table
     * (delta_minhash maintains it) rather than re-deriving it per arm,
     * and the pinned frame is |docs| × 6 digests — far smaller than the
-    * corpus text it replaces re-scans of. Gated on the same conf as the
-    * signed-rung pins so tests/Explain can audit the lazy algebra
-    * (constraint normalization per [[graft.ivm.Ivm]]'s pin: the
-    * checkpointed leaf is cloned into a Union by the rewrite).
+    * corpus text it replaces re-scans of. `localCheckpoint(false)`: the
+    * same LogicalRDD plan cut as an eager pin, with the final stage
+    * deferred to the first consuming job instead of a standalone pin job;
+    * its constraints are normalized because the rewrite clones the leaf
+    * into a Union (see `GraftSql.normalizeRddConstraints`).
     */
   private def pinSigView(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.ivm.pinSignedNet", "true").toBoolean)
-      // lazy checkpoint: same LogicalRDD plan-cut, no standalone pin job
-      // (see Ivm.pinSmall's rationale)
-      graft.engine.Labeled.job(df.sparkSession, "pipeline:sig-pin") {
-        org.apache.spark.sql.graft.GraftSql
-          .normalizeRddConstraints(df.localCheckpoint(false))
-      }
-    else df
+    graft.engine.Labeled.job(df.sparkSession, "pipeline:sig-pin") {
+      org.apache.spark.sql.graft.GraftSql
+        .normalizeRddConstraints(df.localCheckpoint(false))
+    }
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
@@ -517,7 +513,7 @@ object Dedup {
     */
   def incrementalSurvivors(baseLabels: DataFrame,
       newPairs: DataFrame): DataFrame = {
-    // Pin the |δ|-sized inputs ONCE (same idiom as Ivm's pinSmall): the
+    // Pin the |δ|-sized inputs ONCE: the
     // new-pair frame feeds `ends`, the contraction, and (through `rel`)
     // both remap arms, and a caller's lazy lineage — e.g. the full
     // δ-candidate + Jaccard pipeline in `delta_survivors` — would
@@ -528,8 +524,8 @@ object Dedup {
       .union(np.select(col("d2").as("id"))).distinct()
     // stored rows for touched endpoints only — |δ|-sized by construction;
     // pinned for the same reason (read by l1, l2, and the entrant anti).
-    // Both pins lazy: computed once inside their first consumer's job
-    // instead of two standalone barrier jobs (see Ivm.pinSmall)
+    // Both pins lazy: each runs its shuffle and broadcast stages where it
+    // is taken and defers only its final stage to its first consumer
     val rel = baseLabels.join(broadcast(ends), Seq("id"), "left_semi")
       .localCheckpoint(false)
     val l1 = rel.select(col("id").as("d1"), col("label").as("l1"))

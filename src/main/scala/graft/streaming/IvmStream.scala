@@ -121,8 +121,8 @@ final class IncrementalAggView(
   * delta's `applyTo` splices on the join key: the previous generation
   * minus the rows of every key a δ row carries, plus those keys' rows
   * recomputed — `view' = view ▷ touched ∪all (L ⋉ touched) ⋈ (R ⋉ touched)`
-  * (without a plain equi-key it falls back to `(view ∪all inserts) ∖all
-  * retracts`). Alternating parquet generations like [[IncrementalAggView]];
+  * (without a plain equi-key it nets the view with the weighted change
+  * instead). Alternating parquet generations like [[IncrementalAggView]];
   * production sinks apply it as a delete + insert on the touched keys.
   * `cond` must reference columns by name and the two sides' column names
   * must be disjoint (the [[Ivm.SignedDelta]] contract).
@@ -214,7 +214,7 @@ final class IncrementalKeyScopedView(
       val t = spark.table(scoped)
       val sd = Ivm.deltaKeyScoped(q, t, keys)
       // the first generation splices into an empty view: reading
-      // `sd.inserts` for its schema would build (and pin) the netted pair
+      // `sd.inserts` for its schema would build the netted frame
       val prev =
         if (gen < 0) q(t).limit(0)
         else spark.read.parquet(s"$sinkPath/g$gen")

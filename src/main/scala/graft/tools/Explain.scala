@@ -7,7 +7,9 @@ import graft.SparkEntry
 /** Plan-inspection tool: `runMain graft.tools.Explain <sfDir> <query...>`
   * prints the formatted physical plan of each named query (all queries if
   * none named). Used to audit pushdown / pruning / join strategy per the
-  * design-for-scale loop.
+  * design-for-scale loop. The signed maintenance rungs pin nothing, so a
+  * maintenance plan prints whole; the pipeline's pinned signature views
+  * print as ExistingRDD leaves.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -22,14 +24,6 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // show the LAZY maintenance plans (signed-rung pinning would execute
-    // the interesting subtrees at construction and print RDD scans) —
-    // unless SPARK_GRAFT_EXPLAIN_PINNED=1 asks for the PINNED execution
-    // path (what the bench actually runs: pinned frames appear as
-    // ExistingRDD leaves, showing how many subplan repetitions a pin
-    // collapses)
-    if (!sys.env.get("SPARK_GRAFT_EXPLAIN_PINNED").contains("1"))
-      spark.conf.set("spark.graft.ivm.pinSignedNet", "false")
     graft.engine.Tables.init(spark)
     names.foreach { n =>
       println(s"\n========== $n ==========")

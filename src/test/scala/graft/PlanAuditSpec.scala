@@ -12,16 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanAuditSpec extends AnyFunSuite with SparkFixture {
 
-  // audit the LAZY maintenance plans: signed-rung pinning (eager
-  // localCheckpoint of delta-sized frames, the default) executes the
-  // interesting subtrees at construction time and leaves only RDD
-  // scans to inspect
-  private def lazyPlans[A](body: => A): A = {
-    spark.conf.set("spark.graft.ivm.pinSignedNet", "false")
-    try body
-    finally spark.conf.unset("spark.graft.ivm.pinSignedNet")
-  }
-
   // AQE's query-stage wrappers hide scan nodes from collectLeaves;
   // audits that read scan metrics run with it off (same final plan
   // semantics, statically planned)
@@ -31,7 +21,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
-  private def planOf(name: String): String = lazyPlans {
+  private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.asInstanceOf[classic.Dataset[_]].queryExecution.executedPlan.toString
   }
@@ -245,11 +235,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
     }
     val ev = graft.engine.Tables(spark, sfDir, "events")
       .select("user_id", "event_id", "ts", "value")
-    val p = lazyPlans {
-      val sd = graft.ivm.Ivm.deltaKeyScoped(q, ev, Seq("user_id"))
-      sd.inserts.asInstanceOf[classic.Dataset[_]]
-        .queryExecution.executedPlan.toString
-    }
+    val sd = graft.ivm.Ivm.deltaKeyScoped(q, ev, Seq("user_id"))
+    val p = sd.inserts.asInstanceOf[classic.Dataset[_]]
+      .queryExecution.executedPlan.toString
     // an AQE plan string prints current + initial plan, so count >= 2
     assert("BroadcastHashJoin .*LeftSemi".r.findAllIn(p).size >= 2,
       s"expected both restrictions as broadcast semi joins:\n$p")
@@ -363,7 +351,10 @@ class PlanAuditSpec extends AnyFunSuite with SparkFixture {
       s"expected exactly the 3 delta-involving band-join arms, got $joins:\n$p")
     assert(!p.contains("LeftAnti"),
       s"generic distinct interception (base recompute) came back:\n$p")
-    assert(p.contains("word_shingles"), s"native shingle kernel missing:\n$p")
+    // every arm reads the pinned signature view; none re-runs the shingle
+    // kernel (dedup_minhash audits the kernel's own plan)
+    assert(p.contains("Scan ExistingRDD") && !p.contains("word_shingles"),
+      s"band-join arms must read the pinned signature view:\n$p")
   }
 
   test("events_orc: the filter reaches the ORC scan as a pushed filter") {

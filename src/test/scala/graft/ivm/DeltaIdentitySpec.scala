@@ -1263,31 +1263,108 @@ class DeltaIdentitySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("splice: applyTo equals the recompute with exchange reuse on and off") {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
+    type Bag = Map[Seq[Any], Int]
+    def bag(df: DataFrame, cols: Seq[String]): Bag =
+      df.select(cols.map(col): _*).collect().toSeq.map(_.toSeq)
+        .groupBy(identity).view.mapValues(_.size).toMap
+    def minus(a: Bag, b: Bag): Bag = a.flatMap { case (r, n) =>
+      Some(r -> (n - b.getOrElse(r, 0))).filter(_._2 > 0) }
+    def signs(b: Bag, s: Int): Bag = b.map { case (r, n) => (r :+ s) -> n }
+    val dec = (c: String) => col(c).cast(DecimalType(18, 2))
     def q(keys: Seq[String])(o: DataFrame, c: DataFrame) =
       o.groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2))).as("sp"))
+        .agg(count(lit(1)).as("cnt"), sum(dec("o_totalprice")).as("sp"))
         .join(c.select("c_custkey", "c_nationkey", "c_mktsegment"),
           col("o_custkey") === col("c_custkey"), "inner")
         .groupBy(keys.map(col): _*)
         .agg(max(col("sp")).as("max_spend"),
           min(col("cnt")).as("min_orders"), count(lit(1)).as("n_cust"))
+    def tpch(f: (DataFrame, DataFrame) => DataFrame) =
+      (() => f(t("orders"), t("customer")),
+        () => f(base("orders"), base("customer")))
+    val (a, b) = joinSides("reuse")
+    def sides(f: (DataFrame, DataFrame) => DataFrame) =
+      (() => f(spark.table(a), spark.table(b)),
+        () => f(spark.table(a).filter(col("af") =!= 1),
+          spark.table(b).filter(col("bf") =!= 1)))
+    val on = col("k") === col("k2")
+    val ord = Seq(col("v").desc, col("o_orderkey").asc)
+    val orders = (o: DataFrame) =>
+      o.select(col("o_orderkey"), col("o_custkey"), dec("o_totalprice").as("v"))
+    // every signed rung: (name, splices?, Q(full), Q(base), the delta —
+    // None routes Q(full) through maintainAuto)
+    val cases: Seq[(String, Boolean, (() => DataFrame, () => DataFrame),
+        Option[() => Ivm.SignedDelta])] = Seq(
+      ("group-scoped, one key", true, tpch(q(Seq("c_nationkey"))), None),
+      ("group-scoped, two keys", true,
+        tpch(q(Seq("c_nationkey", "c_mktsegment"))), None),
+      ("left join", true, sides(_.join(_, on, "left")), None),
+      ("right join", true, sides(_.join(_, on, "right")), None),
+      ("full join", true, sides(_.join(_, on, "full")), None),
+      ("anti join", true, sides(_.join(_, on, "left_anti")), None),
+      ("peeled top keeping the key", true,
+        sides(_.join(_, on, "left").select("k", "av", "bv")), None),
+      ("key-scoped", true, tpch((o, _) => orders(o).withColumn("run",
+        sum("v").over(Window.partitionBy("o_custkey").orderBy("o_orderkey")))),
+        None),
+      ("except", false, sides((x, y) =>
+        x.select("k").except(y.select(col("k2").as("k")))), None),
+      ("top-k", false, tpch((o, _) => orders(o).orderBy(ord: _*).limit(7)),
+        None),
+      ("grouped top-k", false, tpch((o, _) =>
+        Ivm.groupTopK(orders(o), Seq("o_custkey"), ord, 2)),
+        Some(() => Ivm.deltaGroupTopK(orders(t("orders")), Seq("o_custkey"),
+          ord, 2))),
+      ("agg-join", false, tpch((o, c) => o.groupBy("o_custkey")
+        .agg(count(lit(1)).as("cnt"), sum(dec("o_totalprice")).as("sp"))
+        .join(c.select("c_custkey", "c_nationkey"),
+          col("o_custkey") === col("c_custkey"))), None),
+      ("agg-join-agg", false, tpch((o, c) => o.groupBy("o_custkey")
+        .agg(count(lit(1)).as("cnt"))
+        .join(c.groupBy("c_nationkey").agg(count(lit(1)).as("n")),
+          col("o_custkey") === col("c_nationkey"))), None),
+      ("two-level", false, tpch((o, c) => o.groupBy("o_custkey")
+        .agg(count(lit(1)).as("cnt"),
+          sum(coalesce(dec("o_totalprice"), lit(0))).as("sp"))
+        .join(c.select("c_custkey", "c_nationkey"),
+          col("o_custkey") === col("c_custkey"))
+        .groupBy("c_nationkey").agg(count(lit(1)).as("n_cust"),
+          sum("cnt").as("n_orders"))), None),
+      ("keyless outer join", false,
+        sides(_.join(_, col("k") < col("k2"), "left")), None),
+      ("key-dropping top", false,
+        sides(_.join(_, on, "left").select("av", "bv")), None),
+      ("caller-built pair", false,
+        sides((x, y) => x.join(y, on).select("k", "av", "bv")),
+        Some(() => Ivm.SignedDelta(
+          spark.table(a).join(spark.table(b), on)
+            .filter(col("af") === 1 || col("bf") === 1).select("k", "av", "bv"),
+          spark.table(a).limit(0).join(spark.table(b), on)
+            .select("k", "av", "bv")))))
     val key = "spark.sql.exchange.reuse"
-    // one key inlines as IN; two keys splice through broadcast joins,
-    // whose two touched-set exchanges are canonically identical
-    for (reuse <- Seq("true", "false");
-         keys <- Seq(Seq("c_nationkey"), Seq("c_nationkey", "c_mktsegment"))) {
-      spark.conf.set(key, reuse)
-      try {
-        val stored = q(keys)(base("orders"), base("customer")).localCheckpoint()
-        Ivm.maintainAuto(q(keys)(t("orders"), t("customer"))) match {
-          case Ivm.ApplySigned(sd) if sd.spliced =>
-            val applied = sd.applyTo(stored)
-            assert(splicesByJoin(applied) == (keys.size > 1))
-            assertMultisetEqual(applied, q(keys)(t("orders"), t("customer")))
-          case other => fail(s"expected the group-scoped splice, got $other")
-        }
+    for ((name, spliced, (full, baseQ), make) <- cases) {
+      val cols = full().columns.toSeq
+      val (want, was) = (bag(full(), cols), bag(baseQ(), cols))
+      val stored = baseQ().localCheckpoint()
+      for (reuse <- Seq("true", "false")) try {
+        spark.conf.set(key, reuse)
+        val sd = make.map(_()).getOrElse(Ivm.maintainAuto(full()) match {
+          case Ivm.ApplySigned(sd) => sd
+          case other => fail(s"$name: expected a signed rung, got $other")
+        })
+        assert(sd.spliced == spliced, s"$name: expected spliced=$spliced")
+        val applied = sd.applyTo(stored)
+        assert(bag(applied, cols) == want, s"$name (reuse $reuse): applyTo")
+        if (name.startsWith("group-scoped"))
+          assert(splicesByJoin(applied) == name.endsWith("two keys"))
+        // both nets in ONE query: the minimal signed difference
+        val both = sd.inserts.select(cols.map(col) :+ lit(1).as("s"): _*)
+          .unionByName(sd.retracts.select(cols.map(col) :+ lit(-1).as("s"): _*))
+        assert(bag(both, cols :+ "s") ==
+          signs(minus(want, was), 1) ++ signs(minus(was, want), -1),
+          s"$name (reuse $reuse): inserts ∪all retracts")
       } finally spark.conf.unset(key)
     }
   }
@@ -1407,10 +1484,11 @@ class DeltaIdentitySpec extends AnyFunSuite with SparkFixture {
     val (rows, descs) = jobsOf(sd.applyTo(stored).collect())
     assert(pins(descs) == 0, s"the splice pinned: $descs")
     assert(rows.length == q(spark.table(a), spark.table(b)).count())
-    // the same change applied as a pair pins both frames
-    val (_, pairDescs) = jobsOf(
+    // the same change applied as a weighted frame pins nothing either
+    val (pairRows, pairDescs) = jobsOf(
       Ivm.SignedDelta(sd.inserts, sd.retracts).applyTo(stored).collect())
-    assert(pins(pairDescs) > 0, s"the pair form ran no pin: $pairDescs")
+    assert(pins(pairDescs) == 0, s"the weighted form pinned: $pairDescs")
+    assert(pairRows.length == rows.length)
   }
 
   /** `body`'s result and the descriptions of the jobs it ran. */
