@@ -44,10 +44,10 @@ case class GraftDmlCommand(statement: String, body: SparkSession => Unit)
   * ([[lowerSubqueries]] — uncorrelated IN/scalar, single-equality
   * EXISTS; other correlation shapes refuse), MERGE needs at least
   * one same-name key equality in ON (extra conjuncts refine the
-  * match; canonical upserts route to the lean native merge, every
-  * other clause combination — conditional matched UPDATE/DELETE,
-  * explicit value lists, NOT MATCHED BY SOURCE — to the general-form
-  * writers), and a time-traveled relation is not a write target.
+  * match; every clause combination — the canonical upsert,
+  * conditional matched UPDATE/DELETE, explicit value lists, NOT
+  * MATCHED BY SOURCE — lowers to the general-form writers), and a
+  * time-traveled relation is not a write target.
   *
   * Like the INSERT bridge and [[GraftCatalog.transaction]], staging is
   * HEAD-BASED: the DML commits on the TABLE's current head and the
@@ -366,25 +366,6 @@ object GraftDml {
         refuseIf(thetaOk && extraConjuncts.isEmpty,
           s"$stmt: empty ON")
         val targetCols = stripAliases(m.targetTable).output.map(_.name)
-        // the CANONICAL UPSERT routes to the lean native merge; every
-        // other legal clause combination lowers to the general-form
-        // writer ([[MergeActions]]) below
-        val canonical = extraConjuncts.isEmpty &&
-          m.notMatchedBySourceActions.isEmpty &&
-          (m.matchedActions match {
-            case Seq(ua: UpdateAction) if ua.condition.isEmpty =>
-              isAllColumnCopy(ua.assignments, targetCols, sOut)
-            case Seq(_: UpdateStarAction) => m.matchedActions.head
-              .asInstanceOf[UpdateStarAction].condition.isEmpty
-            case _ => false
-          }) &&
-          (m.notMatchedActions match {
-            case Seq() => true
-            case Seq(ia: InsertAction) if ia.condition.isEmpty =>
-              isAllColumnCopy(ia.assignments, targetCols, sOut)
-            case Seq(ia: InsertStarAction) => ia.condition.isEmpty
-            case _ => false
-          })
         // explicit assignment lists resolve against the
         // POST-EVOLUTION schema (r16 verdict #3): a list may name the
         // new top-level columns (unresolved keys, resolved here by
@@ -434,131 +415,112 @@ object GraftDml {
             }
           }
         val source = m.sourceTable
-        if (canonical) {
-          val insertNotMatched = m.notMatchedActions.nonEmpty
-          GraftDmlCommand(stmt, spark => {
-            evolveFirst(spark)
-            val src = GraftSql.ofRows(spark, source)
-            commitVia(t,
-              DeltaLake.merge(spark, t.entry.path, src, keys,
-                insertNotMatched),
-              Iceberg.merge(spark, t.entry.path, src, keys,
-                insertNotMatched))
-          })
-        } else {
-          // GENERAL FORM: conditions/assignments lowered per scope —
-          // matched clauses see target columns by name and source
-          // columns as MergeActions.src; insert clauses see only the
-          // source; by-source clauses see only the target
-          def lowerMixed(e: Expression): Column =
-            lowered(session, e, stmt) {
-              case a if tOut.contains(a) =>
-                UnresolvedAttribute(Seq(a.name))
-              case a if sOut.contains(a) =>
-                UnresolvedAttribute(
-                  Seq(graft.sources.MergeActions.SrcPrefix + a.name))
-            }
-          def lowerSource(e: Expression): Column =
-            lowered(session, e, stmt) {
-              case a if sOut.contains(a) =>
-                UnresolvedAttribute(Seq(a.name))
-            }
-          def lowerTarget(e: Expression): Column =
-            lowered(session, e, stmt) {
-              case a if tOut.contains(a) =>
-                UnresolvedAttribute(Seq(a.name))
-            }
-          // nested struct-member targets fold into whole-column
-          // rebuilds exactly like UPDATE ([[foldNestedSets]]); the
-          // withField base resolves against the clause's TARGET row
-          val mTypeOf: String => Option[org.apache.spark.sql.types
-            .DataType] = n => stripAliases(m.targetTable).output
-            .find(_.name.equalsIgnoreCase(n)).map(_.dataType)
-          def setOf(assigns: Seq[Assignment],
-              lower: Expression => Column): Map[String, Column] =
-            foldNestedSets(assigns.map { a =>
-              val (name, path) = keyPathOf(a.key,
-                raw => targetCols.find(_.equalsIgnoreCase(raw))
-                  .getOrElse(raw), stmt)
-              (name, path, lower(a.value))
-            }, stmt, mTypeOf)
-          // an explicit INSERT list under evolution: new columns it
-          // does not name land a typed NULL (the writers commit full
-          // rows; pre-evolution alignment cannot have filled them)
-          def fillEvolved(set: Map[String, Column]): Map[String, Column] =
-            set ++ topEvolve.collect {
-              case (_, f) if !set.keys.exists(
-                  _.equalsIgnoreCase(f.name)) =>
-                f.name -> lit(null).cast(f.dataType)
-            }
-          import graft.sources.MergeActions._
-          val matchedActs: Seq[Matched] = m.matchedActions.map {
-            case ua: UpdateAction =>
-              // a star-verified explicit list under evolution cannot
-              // name the new columns — lower to the full-row form so
-              // they update from the source too; a genuinely explicit
-              // list resolves against the post-evolution schema and
-              // updates exactly what it names
-              MatchedUpdate(ua.condition.map(lowerMixed),
-                if (evolveCols.nonEmpty &&
-                    isAllColumnCopy(ua.assignments, targetCols, sOut))
-                  None
-                else Some(setOf(ua.assignments, lowerMixed)))
-            case ua: UpdateStarAction =>
-              MatchedUpdate(ua.condition.map(lowerMixed), None)
-            case da: DeleteAction =>
-              MatchedDelete(da.condition.map(lowerMixed))
-            case other => refuse(s"$stmt: unsupported WHEN MATCHED " +
-              s"action '$other'")
+        // conditions/assignments lowered per scope — matched clauses see
+        // target columns by name and source columns as MergeActions.src;
+        // insert clauses see only the source; by-source clauses see only
+        // the target
+        def lowerMixed(e: Expression): Column =
+          lowered(session, e, stmt) {
+            case a if tOut.contains(a) =>
+              UnresolvedAttribute(Seq(a.name))
+            case a if sOut.contains(a) =>
+              UnresolvedAttribute(
+                Seq(graft.sources.MergeActions.SrcPrefix + a.name))
           }
-          val insertActs: Seq[NotMatchedInsert] =
-            m.notMatchedActions.map {
-              case ia: InsertAction =>
-                NotMatchedInsert(ia.condition.map(lowerSource),
-                  if (evolveCols.nonEmpty &&
-                      isAllColumnCopy(ia.assignments, targetCols, sOut))
-                    None
-                  else Some(fillEvolved(
-                    setOf(ia.assignments, lowerSource))))
-              case ia: InsertStarAction =>
-                NotMatchedInsert(ia.condition.map(lowerSource), None)
-              case other => refuse(s"$stmt: unsupported WHEN NOT " +
-                s"MATCHED action '$other'")
-            }
-          val bySourceActs: Seq[BySource] =
-            m.notMatchedBySourceActions.map {
-              case ua: UpdateAction =>
-                BySourceUpdate(ua.condition.map(lowerTarget),
-                  setOf(ua.assignments, lowerTarget))
-              case da: DeleteAction =>
-                BySourceDelete(da.condition.map(lowerTarget))
-              case other => refuse(s"$stmt: unsupported WHEN NOT " +
-                s"MATCHED BY SOURCE action '$other'")
-            }
-          val extra: Option[Column] =
-            if (extraConjuncts.isEmpty) None
-            else Some(extraConjuncts.map(lowerMixed)
-              .reduce(_ && _))
-          GraftDmlCommand(stmt, spark => {
-            evolveFirst(spark)
-            val src = GraftSql.ofRows(spark, source)
-            commitVia(t,
-              DeltaLake.mergeGeneral(spark, t.entry.path, src, keys,
-                matchedActs, insertActs, bySourceActs, extra,
-                thetaFullScan = thetaOk),
-              Iceberg.mergeGeneral(spark, t.entry.path, src, keys,
-                matchedActs, insertActs, bySourceActs, extra,
-                thetaFullScan = thetaOk))
-          })
+        def lowerSource(e: Expression): Column =
+          lowered(session, e, stmt) {
+            case a if sOut.contains(a) =>
+              UnresolvedAttribute(Seq(a.name))
+          }
+        def lowerTarget(e: Expression): Column =
+          lowered(session, e, stmt) {
+            case a if tOut.contains(a) =>
+              UnresolvedAttribute(Seq(a.name))
+          }
+        // nested struct-member targets fold into whole-column rebuilds
+        // exactly like UPDATE ([[foldNestedSets]]); the withField base
+        // resolves against the clause's TARGET row
+        val mTypeOf: String => Option[org.apache.spark.sql.types
+          .DataType] = n => stripAliases(m.targetTable).output
+          .find(_.name.equalsIgnoreCase(n)).map(_.dataType)
+        def setOf(assigns: Seq[Assignment],
+            lower: Expression => Column): Map[String, Column] =
+          foldNestedSets(assigns.map { a =>
+            val (name, path) = keyPathOf(a.key,
+              raw => targetCols.find(_.equalsIgnoreCase(raw))
+                .getOrElse(raw), stmt)
+            (name, path, lower(a.value))
+          }, stmt, mTypeOf)
+        // an explicit INSERT list under evolution: new columns it does
+        // not name land a typed NULL (the writers commit full rows;
+        // pre-evolution alignment cannot have filled them)
+        def fillEvolved(set: Map[String, Column]): Map[String, Column] =
+          set ++ topEvolve.collect {
+            case (_, f) if !set.keys.exists(_.equalsIgnoreCase(f.name)) =>
+              f.name -> lit(null).cast(f.dataType)
+          }
+        import graft.sources.MergeActions._
+        // an ALL-COLUMN COPY (what the analyzer expands `SET *` /
+        // `INSERT *` to) lowers to the star action: it copies the
+        // columns an evolution adds, keeps keys, partition and identity
+        // columns, and lets generated columns recompute; any other list
+        // resolves against the post-evolution schema and assigns
+        // exactly what it names
+        val matchedActs: Seq[Matched] = m.matchedActions.map {
+          case ua: UpdateAction =>
+            MatchedUpdate(ua.condition.map(lowerMixed),
+              if (isAllColumnCopy(ua.assignments, targetCols, sOut)) None
+              else Some(setOf(ua.assignments, lowerMixed)))
+          case ua: UpdateStarAction =>
+            MatchedUpdate(ua.condition.map(lowerMixed), None)
+          case da: DeleteAction =>
+            MatchedDelete(da.condition.map(lowerMixed))
+          case other => refuse(s"$stmt: unsupported WHEN MATCHED " +
+            s"action '$other'")
         }
+        val insertActs: Seq[NotMatchedInsert] =
+          m.notMatchedActions.map {
+            case ia: InsertAction =>
+              NotMatchedInsert(ia.condition.map(lowerSource),
+                if (isAllColumnCopy(ia.assignments, targetCols, sOut)) None
+                else Some(fillEvolved(setOf(ia.assignments, lowerSource))))
+            case ia: InsertStarAction =>
+              NotMatchedInsert(ia.condition.map(lowerSource), None)
+            case other => refuse(s"$stmt: unsupported WHEN NOT " +
+              s"MATCHED action '$other'")
+          }
+        val bySourceActs: Seq[BySource] =
+          m.notMatchedBySourceActions.map {
+            case ua: UpdateAction =>
+              BySourceUpdate(ua.condition.map(lowerTarget),
+                setOf(ua.assignments, lowerTarget))
+            case da: DeleteAction =>
+              BySourceDelete(da.condition.map(lowerTarget))
+            case other => refuse(s"$stmt: unsupported WHEN NOT " +
+              s"MATCHED BY SOURCE action '$other'")
+          }
+        val extra: Option[Column] =
+          if (extraConjuncts.isEmpty) None
+          else Some(extraConjuncts.map(lowerMixed).reduce(_ && _))
+        GraftDmlCommand(stmt, spark => {
+          evolveFirst(spark)
+          val src = GraftSql.ofRows(spark, source)
+          commitVia(t,
+            DeltaLake.mergeGeneral(spark, t.entry.path, src, keys,
+              matchedActs, insertActs, bySourceActs, extra,
+              thetaFullScan = thetaOk),
+            Iceberg.mergeGeneral(spark, t.entry.path, src, keys,
+              matchedActs, insertActs, bySourceActs, extra,
+              thetaFullScan = thetaOk))
+        })
       }.orElse(pathTargetOf(m.targetTable).map { pt =>
         val stmt = s"MERGE INTO ${pt.format} `${pt.path}`"
         refuseIf(m.withSchemaEvolution, s"$stmt: WITH SCHEMA " +
           "EVOLUTION is not supported")
         refuseIf(m.notMatchedBySourceActions.nonEmpty, s"$stmt: WHEN " +
           "NOT MATCHED BY SOURCE is not supported")
-        // pre-resolution only the STAR actions are verifiable — and
-        // stars ARE the canonical upsert the native merge implements
+        // pre-resolution only the STAR actions are verifiable: the
+        // canonical upsert, which the formats' `merge` runs
         m.matchedActions match {
           case Seq(ua: UpdateStarAction) if ua.condition.isEmpty => ()
           case _ => refuse(s"$stmt: path-identifier MERGE takes " +
@@ -615,41 +577,8 @@ object GraftDml {
     case _ => None
   }
 
-  /** Every assignment must copy a same-name source column, and the
-    * assignment set must cover every target column — the shape
-    * `UPDATE SET *` / `INSERT *` expand to, and exactly what the
-    * native merge commits (all columns from the source row).
-    */
-  private def requireAllColumnCopy(
-      assigns: Seq[org.apache.spark.sql.catalyst.plans.logical.Assignment],
-      targetCols: Seq[String],
-      sOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-      stmt: String, clause: String): Unit = {
-    val covered = assigns.map { a =>
-      val name = a.key match {
-        case ar: AttributeReference => ar.name
-        case other => refuse(s"$stmt: $clause target must be a " +
-          s"top-level column, got '${other.sql}'")
-      }
-      stripCasts(a.value) match {
-        case ar: AttributeReference
-            if sOut.contains(ar) && ar.name.equalsIgnoreCase(name) => ()
-        case other => refuse(s"$stmt: $clause must copy the " +
-          s"same-name source column ($name = source.$name), got " +
-          s"'$name = ${other.sql}' — computed merge columns go " +
-          "through the library API (pre-compute them in the source)")
-      }
-      name.toLowerCase
-    }.toSet
-    val missing = targetCols.filterNot(c => covered.contains(c.toLowerCase))
-    refuseIf(missing.nonEmpty, s"$stmt: $clause must cover every " +
-      s"target column (the native merge writes full rows) — missing: " +
-      missing.mkString(", "))
-  }
-
-  /** Non-refusing twin of [[requireAllColumnCopy]] — does this
-    * assignment list expand to `SET * / INSERT *` (every target column
-    * copied from its same-name source column)?
+  /** Does this assignment list expand to `SET * / INSERT *` (every
+    * target column copied from its same-name source column)?
     */
   private def isAllColumnCopy(assigns: Seq[Assignment],
       targetCols: Seq[String],

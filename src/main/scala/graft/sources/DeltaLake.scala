@@ -2708,18 +2708,6 @@ object DeltaLake {
     s"""{"add":${M.writeValueAsString(add)}}"""
   }
 
-  /** `_metadata.file_path` back to the local absolute path the log
-    * resolves to. The metadata column is the `PartitionedFile`'s
-    * URL-ENCODED URI rendering — scheme optional (`file:/…`,
-    * `file:///…`, or bare) and special characters escaped (a partition
-    * dir with a space renders `%20`) — so parse as a URI and take the
-    * DECODED path.
-    */
-  private def metaPathToLocal(p: String): String = {
-    val u = java.net.URI.create(p)
-    Option(u.getPath).filter(_.nonEmpty).getOrElse(p)
-  }
-
   /** PUBLIC BATCH WRITER — commit `df` as the next version of the
     * Delta table at `path`; returns the committed version. Creates the
     * table (protocol + metaData + adds in commit 0) when none exists.
@@ -3013,21 +3001,9 @@ object DeltaLake {
     val candidates = st.adds.filter(a =>
       mayMatch(pred, a.partitionValues, a.stats, st))
     if (candidates.isEmpty) return -1L
-    import spark.implicits._
-    val perFile: Array[(String, Array[Byte])] =
-      readFiles(spark, path, st, candidates, withMeta = true)
-        .filter(predicate)
-        .select(col("_metadata.file_path"), col("_metadata.row_index"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (p, it) =>
-          val bm = new DeletionVectors.Bitmap64
-          it.foreach(t => bm.add(t._2))
-          (p, bm.serialize())
-        }.collect()
+    val perFile = RowLevelDml.deletedRows(dmlTable(spark, path, st),
+      candidates, predicate)
     if (perFile.isEmpty) return -1L
-    val byAbs = st.adds.map(a =>
-      new java.io.File(resolve(path, a.path)).getAbsolutePath -> a).toMap
     val next = st.version + 1
     val actions = mutable.Buffer.empty[String]
     actions ++= ictAction(st.configuration, "DELETE", path)
@@ -3036,18 +3012,13 @@ object DeltaLake {
       // CDF: the commit carries the deleted ROWS as change files (a
       // second pass over the HIT files only — the bitmap job carries
       // indexes, not rows)
-      val hitAbs = perFile.map(t => metaPathToLocal(t._1)).toSet
-      val hits = st.adds.filter(a => hitAbs.contains(
-        new java.io.File(resolve(path, a.path)).getAbsolutePath))
+      val hits = perFile.map(_._1).toSet
       actions ++= cdcActions(spark, path, st,
-        readFiles(spark, path, st, hits).filter(predicate)
+        readFiles(spark, path, st, candidates.filter(hits))
+          .filter(predicate)
           .withColumn("_change_type", lit("delete")), next)
     }
-    perFile.sortBy(_._1).foreach { case (mp, bytes) =>
-      val abs = metaPathToLocal(mp)
-      val a = byAbs.getOrElse(abs, throw new IllegalStateException(
-        s"delete scan surfaced a file the snapshot does not list: $abs"))
-      val merged = DeletionVectors.deserialize(bytes)
+    perFile.foreach { case (a, merged) =>
       // grow, never replace: the old DV's rows stay dead
       a.dv.foreach(d =>
         DeletionVectors.read(path, d).toArray.foreach(merged.add))
@@ -3063,11 +3034,9 @@ object DeltaLake {
     * holding a matching live row is removed and rewritten with `set`
     * applied to the matching rows (survivor rows copied unchanged,
     * any deletion vector MATERIALIZED — the rewritten file holds live
-    * rows only). SQL UPDATE semantics: the predicate and every SET
-    * expression evaluate against the OLD row in one projection, and a
-    * NULL predicate means the row is untouched. SET on a partition
-    * column is refused (that's a row MOVE between partitions — a
-    * different operation). Returns the committed version, or -1 when
+    * rows only). SQL UPDATE semantics and the SET rules (case-insensitive
+    * keys, self-assignments, no partition or identity column values) per
+    * [[RowLevelDml.updateSet]]. Returns the committed version, or -1 when
     * nothing matched.
     *
     * Scale shape: stats-pruned candidates → one distributed job finds
@@ -3084,72 +3053,13 @@ object DeltaLake {
     import org.apache.spark.sql.functions.when
     val st = replay(spark, path, None)
     requireWritable(st, path, "update")
-    // SET keys resolve CASE-INSENSITIVELY like SQL (the path-identifier
-    // bridge cannot canonicalize pre-resolution — no schema yet);
-    // unknown names pass through so the existing data-column check
-    // refuses them with its own message
-    val set: Map[String, org.apache.spark.sql.Column] = {
-      val canonical = rawSet.toSeq.map { case (k, v) =>
-        (st.schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(k),
-          k, v)
-      }
-      // two raw keys differing only in case canonicalize to the SAME
-      // column — a library-API caller's duplicate assignment; refuse
-      // instead of silently last-wins (the SQL bridge dedups earlier)
-      canonical.groupBy(_._1).foreach { case (c, ks) =>
-        require(ks.length == 1, s"update $path: duplicate SET target " +
-          s"'$c' (raw keys ${ks.map(_._2).mkString(", ")})")
-      }
-      canonical.map { case (c, _, v) => c -> v }.toMap
-    }
     // identity tables UPDATE fine as long as the SET leaves the
     // identity columns alone (their values are already allocated;
     // an update rewrites rows, it never creates them)
     requireNoRowContracts(st, path, "update", allowIdentity = true)
-    // identity-identity entries (`SET id = id` — the bridge's
-    // all-identity lowering can pick any aligned column) are no-ops,
-    // dropped like the partition tolerance below; REAL values on
-    // identity columns refuse (writer-allocated, immutable)
-    val idCols = identityOf(st.schema).keySet
-    val set0 = {
-      val idIdent = set.filter { case (c, e) =>
-        idCols.contains(c) && e.toString == col(c).toString }
-      val rest = set -- idIdent.keys
-      if (rest.nonEmpty || idIdent.isEmpty) rest
-      else {
-        val candidates = st.schema.fieldNames
-          .filterNot(idCols.contains)
-          .filterNot(st.partitionColumns.contains)
-        require(candidates.nonEmpty, "DeltaLake.update: no " +
-          "non-identity data column to carry the identity rewrite")
-        Map(candidates.head -> col(candidates.head))
-      }
-    }
-    require(set0.keySet.intersect(idCols).isEmpty,
-      s"DeltaLake.update: SET touches identity column(s) " +
-        s"${set0.keySet.intersect(idCols).mkString(", ")} — identity " +
-        "values are writer-allocated and immutable")
-    val dataCols =
-      st.schema.fieldNames.toSeq.filterNot(st.partitionColumns.contains)
-    require(set.nonEmpty, "DeltaLake.update: empty SET")
-    // identity SET on a partition column (`SET p = p`) is a no-move
-    // no-op — the SQL bridge lowers all-identity statements wholesale
-    // and the analyzer aligns fill-ins for every column, so tolerate
-    // the identity shape (drop it; substitute one data-column identity
-    // if nothing remains — the statement must still rewrite matched
-    // rows). REAL values on partition columns keep refusing.
-    val set1 = {
-      val idPart = set0.filter { case (c, e) =>
-        st.partitionColumns.contains(c) && e.toString == col(c).toString
-      }
-      val rest = set0 -- idPart.keys
-      if (rest.nonEmpty || idPart.isEmpty) rest
-      else Map(dataCols.head -> col(dataCols.head))
-    }
-    require(set1.keySet.subsetOf(dataCols.toSet),
-      s"DeltaLake.update: SET columns ${set1.keySet} must be data " +
-        "columns (updating a partition column is a move, not a " +
-        s"rewrite) — data columns: $dataCols")
+    val t = dmlTable(spark, path, st)
+    val set = RowLevelDml.updateSet("DeltaLake.update", t, rawSet,
+      identity = identityOf(st.schema).keySet)
     val hits = hitFiles(spark, path, st, predicate)
     if (hits.isEmpty) return -1L
     // GENERATED columns the SET does not assign RECOMPUTE on matched
@@ -3161,20 +3071,9 @@ object DeltaLake {
     // one into a new value would be a row MOVE between partitions,
     // which update refuses — the equality row-check keeps that loud)
     val genRe = generatedOf(st.schema).filterNot { case (g, _) =>
-      set1.contains(g) || st.partitionColumns.contains(g) }
-    def applySet(df: DataFrame): DataFrame = {
-      def postRef(c: String): org.apache.spark.sql.Column =
-        set1.get(c) match {
-          case Some(e) =>
-            // NULLABLE cast target: a nested withField rebuild
-            // yields nullable members, and casting to the stored
-            // non-nullable struct shape is illegal — the reader
-            // forces nullability anyway (LakeScan.asNullable)
-            when(predicate,
-              e.cast(LakeScan.asNullable(st.schema(c).dataType)))
-              .otherwise(col(c))
-          case None => col(c)
-        }
+      set.contains(g) || st.partitionColumns.contains(g) }
+    val postRef = RowLevelDml.setValue(t, predicate, set) _
+    def applySet(df: DataFrame): DataFrame =
       df.select(st.schema.fieldNames.toIndexedSeq.map { c =>
         genRe.get(c) match {
           case Some(g) =>
@@ -3184,7 +3083,6 @@ object DeltaLake {
           case None => postRef(c).as(c)
         }
       }: _*)
-    }
     val rewritten = applySet(readFiles(spark, path, st, hits))
     // CHECK constraints: the post-image of the matched rows must
     // satisfy them (unchanged rows passed at their own write time)
@@ -3210,35 +3108,17 @@ object DeltaLake {
 
   /** PUBLIC MERGE (upsert) — `MERGE INTO target USING source ON
     * target.k = source.k WHEN MATCHED THEN UPDATE SET * WHEN NOT
-    * MATCHED THEN INSERT *`, the CDC-upsert shape: a target row whose
-    * key appears in `source` is replaced by the source row; source
-    * rows matching nothing are inserted (unless
-    * `insertNotMatched=false`). One atomic commit: remove+add
-    * rewrite pairs for the hit files plus plain adds for the new
-    * rows. Duplicate keys in `source` are refused (the SQL standard's
-    * cardinality violation — applying an ambiguous match would be
-    * nondeterministic). Partition columns must be part of the key
-    * (otherwise a match could MOVE a row across partitions, which is
-    * delete+insert, not update). Returns the committed version, or
-    * -1 when the merge would change nothing.
-    *
-    * Scale shape: the match probe and the insert anti-join are
-    * ordinary shuffled joins Catalyst plans (broadcast when `source`
-    * is small); the rewrite reads ONLY the hit files and lands
-    * through the table's partition layout in one job. The probe and
-    * anti-join each scan the target once, but Catalyst column-prunes
-    * both to the key (+file metadata) columns — the two passes cost
-    * key-column I/O, not 2× full rows.
+    * MATCHED THEN INSERT *`, the CDC-upsert shape: [[mergeGeneral]]
+    * with `SET *` and `INSERT *` (no insert action when
+    * `insertNotMatched = false`). The source must carry every table
+    * column and the partition columns must be keys (a non-key one would
+    * let a match move a row between partitions). Returns the committed
+    * version, or -1 when the merge would change nothing.
     */
   def merge(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String], insertNotMatched: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.when
+    import MergeActions._
     val st = replay(spark, path, None)
-    requireWritable(st, path, "merge")
-    requireNoRowContracts(st, path, "merge", allowIdentity = true)
-    require(keys.nonEmpty, "DeltaLake.merge: empty key list")
-    require(keys.forall(st.schema.fieldNames.contains),
-      s"DeltaLake.merge: keys $keys must be table columns")
     require(st.schema.fieldNames.forall(source.schema.fieldNames.contains),
       "DeltaLake.merge: the source must carry every table column " +
         s"(INSERT * needs them) — table: ${st.schema.fieldNames.toSeq}, " +
@@ -3248,183 +3128,31 @@ object DeltaLake {
         s"(${st.partitionColumns.mkString(",")}) must be merge keys — " +
         "a non-key partition column would let a match move rows " +
         "across partitions")
-    // NULLABLE cast targets (see the SET-value casts): the stored
-    // schema's non-nullable struct members make a nullable source
-    // struct un-castable, and the reader forces nullability anyway
-    val src = source.select(st.schema.map(f =>
-      col(f.name).cast(LakeScan.asNullable(f.dataType))
-        .as(f.name)): _*).cache()
-    var pinned: Option[DataFrame] = None
-    try {
-      // cardinality check over MATCHABLE keys only: a NULL key matches
-      // nothing (SQL ON semantics), so duplicate null-key source rows
-      // are two independent inserts, not an ambiguity
-      val keyPred = keys.map(k => col(k).isNotNull).reduce(_ && _)
-      require(src.filter(keyPred).groupBy(keys.map(col): _*).count()
-          .filter(col("count") > 1).isEmpty,
-        "DeltaLake.merge: duplicate keys in the source — an ambiguous " +
-          "match is nondeterministic (the SQL cardinality violation)")
-      val target = readFiles(spark, path, st, st.adds, withMeta = true)
-      val hitPaths = target.join(src, keys, "left_semi")
-        .select(col("_metadata.file_path")).distinct()
-        .as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().map(metaPathToLocal).toSet
-      val hits = st.adds.filter(a =>
-        hitPaths.contains(new java.io.File(resolve(path, a.path))
-          .getAbsolutePath))
-      // NULL-key source rows match nothing → NOT MATCHED → inserted
-      // (the anti join keeps them: NULL never equals a target key)
-      val inserts =
-        if (!insertNotMatched) src.limit(0)
-        else src.join(
-          readFiles(spark, path, st, st.adds)
-            .select(keys.map(col): _*), keys, "left_anti")
-      if (hits.isEmpty && inserts.isEmpty) return -1L
-      // replace matched rows with the source row: non-key columns come
-      // from the source when the key matched, else from the target
-      // (lazy: with no hit files there is nothing to rewrite and the
-      // commit is insert-only)
-      val nonKey = st.schema.fieldNames.toSeq.filterNot(keys.contains)
-      val sRen = src.select(keys.map(col) ++
-        nonKey.map(c => col(c).as(s"__s_$c")) :+
-        lit(true).as("__m"): _*)
-      def joined = readFiles(spark, path, st, hits)
-        .join(sRen, keys.toSeq, "left")
-      // IDENTITY columns are immutable surrogates: a matched row
-      // KEEPS the target's value (the CDC-upsert shape preserves the
-      // surrogate); the insert arm allocates for nulls below
-      val ids = identityOf(st.schema)
-      // GENERATED columns recompute from the matched row's post-image
-      // (source values) instead of trusting the source's copy — the
-      // ALWAYS contract; partition generated columns are keys here
-      // (partition ⊆ keys) and keep the target value
-      val genM = generatedOf(st.schema).filterNot { case (g, _) =>
-        keys.contains(g) || ids.contains(g) }
-      def replaced(df: DataFrame) = {
-        def refOf(n: String): org.apache.spark.sql.Column =
-          if (keys.contains(n) || ids.contains(n)) col(n)
-          else when(col("__m").isNotNull, col(s"__s_$n"))
-            .otherwise(col(n))
-        df.select(st.schema.fieldNames.toIndexedSeq.map { c =>
-          genM.get(c) match {
-            case Some(g) =>
-              when(col("__m").isNotNull,
-                genExprOver(g, refOf).cast(st.schema(c).dataType))
-                .otherwise(col(c)).as(c)
-            case None => refOf(c).as(c)
-          }
-        }: _*)
-      }
-      def rewritten = replaced(joined)
-      if (ids.nonEmpty && !inserts.isEmpty)
-        requireNoExplicitAlways(inserts, ids, "DeltaLake.merge")
-      val insertRows0 =
-        inserts.select(st.schema.toIndexedSeq.map { f =>
-          ids.get(f.name) match {
-            case Some(spec) =>
-              identityAlloc(spec, Some(col(f.name)), f.dataType)
-                .as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-      // identity allocation rides monotonically_increasing_id —
-      // NONDETERMINISTIC across executions — and insertRows feeds the
-      // row checks, the data-file landing, AND the CDF change files:
-      // unpinned, the change feed's insert rows could carry different
-      // surrogates than the landed data (the sink path persists for
-      // exactly this hazard). MEMORY_AND_DISK: one materialization,
-      // every consumer reads the same values.
-      val pinInserts = ids.nonEmpty && !inserts.isEmpty &&
-        (cdfEnabled(st) || rowChecksOf(st).nonEmpty)
-      val insertRows =
-        if (pinInserts) { pinned = Some(insertRows0.persist())
-          insertRows0 }
-        else insertRows0
-      // row checks: matched replacements + inserts must satisfy
-      locally {
-        val cs = rowChecksOf(st)
-        if (cs.nonEmpty) {
-          if (hits.nonEmpty) enforceConstraints(
-            replaced(joined.filter(col("__m").isNotNull)), cs, path,
-            "merge")
-          if (!inserts.isEmpty)
-            enforceConstraints(insertRows, cs, path, "merge")
-        }
-      }
-      val insertAdds =
-        if (inserts.isEmpty) Seq.empty
-        else addFileActions(spark, path, insertRows,
-          st.partitionColumns)
-      val cdc =
-        if (!cdfEnabled(st)) Seq.empty
-        else {
-          val insCdc =
-            insertRows.withColumn("_change_type", lit("insert"))
-          if (hits.isEmpty)
-            // insert-only upsert: no matched rows exist and `joined`
-            // must not be constructed (no hit files to scan, and its
-            // __m/__s_* columns would be unresolvable)
-            cdcActions(spark, path, st, insCdc, st.version + 1)
-          else {
-            // cache the matched rows: the pre/post image pair would
-            // otherwise execute the hit-file scan + source join twice
-            // inside one write job
-            val origCols = st.schema.fieldNames.toIndexedSeq.map(col)
-            val matched = joined.filter(col("__m").isNotNull).persist()
-            try cdcActions(spark, path, st,
-              matched.select(origCols: _*)
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(replaced(matched)
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(insCdc),
-              st.version + 1)
-            finally { matched.unpersist(); () }
-          }
-        }
-      // the allocated identity marks advance in the SAME commit's
-      // metaData (from the landed insert files' stats); a concurrent
-      // commit collides at the exclusive version link — loud, never a
-      // duplicate allocation
-      val idMeta = identityAdvanceOf(insertAdds, ids) match {
-        case nh if nh.isEmpty => Seq.empty
-        case nh => Seq(metaAction(path, withHighWater(st.schema, nh),
-          st.partitionColumns, st.configuration, st.tableId))
-      }
-      commitRewrite(spark, path, st, hits, rewritten, "MERGE",
-        insertAdds ++ cdc ++ idMeta)
-    } finally {
-      pinned.foreach(_.unpersist()); src.unpersist(); ()
-    }
+    mergeGeneral(spark, path, st,
+      source.select(st.schema.fieldNames.toIndexedSeq.map(col): _*), keys,
+      Seq(MatchedUpdate()),
+      if (insertNotMatched) Seq(NotMatchedInsert()) else Nil, Nil, None,
+      thetaFullScan = false)
   }
 
   /** GENERAL-FORM MERGE — the full SQL clause set over the
     * copy-on-write writer: ordered conditional `WHEN MATCHED`
     * UPDATE/DELETE actions, conditional `WHEN NOT MATCHED` inserts,
     * and `WHEN NOT MATCHED BY SOURCE` UPDATE/DELETE. Expression
-    * scopes and first-match ordering per [[MergeActions]]. The ON
-    * condition is a key-equality conjunction (`keys`) — that is what
-    * keeps the rewrite hit-file-local. A PURE THETA ON (no key
-    * equality) is accepted only behind `thetaFullScan = true` with
-    * the condition as `matchExtra`: the probe, the per-target-row
-    * cardinality check, and the rewrite then scan the full table —
-    * a documented non-file-local fallback, refused by default.
+    * scopes and first-match ordering per [[MergeActions]]; the ON
+    * contract (key equality plus `matchExtra`, a pure theta ON only
+    * behind `thetaFullScan = true`), the hit files and the cardinality
+    * rule per [[RowLevelDml.merge]]. The rewrite reads ONLY the hit
+    * files and lands, with the inserts, through the table's partition
+    * layout.
     *
-    * Scale shape mirrors [[merge]]: the matched probe and the
-    * by-source anti-join are ordinary Catalyst joins column-pruned to
-    * the keys (+condition columns); the rewrite reads ONLY the files
-    * holding affected rows — matched hits from the semi-join,
-    * by-source hits stats-bounded by the action conditions evaluated
-    * on the anti-joined target — and lands through the table's
-    * partition layout in one job. An unconditioned BY SOURCE action
-    * legitimately touches every non-matched file (that is its
-    * semantics), conditioned ones only the satisfying files.
-    *
-    * Duplicate source keys are refused when matched actions exist
-    * (the SQL cardinality violation); a matched-action-free merge
-    * (pure insert) tolerates them — each not-matched row inserts.
-    * CDF-enabled tables emit the row-level diff (update pre/post
-    * images, deletes, inserts). Returns the committed version, or -1
-    * when nothing changed.
+    * Delta's row contracts apply over the planned frames: identity
+    * columns allocate on insert and keep the target's value on update,
+    * generated columns no SET assigns recompute on updated rows, CHECK
+    * constraints hold for updated and inserted rows, and CDF-enabled
+    * tables emit the row-level diff (update pre/post images, deletes,
+    * inserts). Returns the committed version, or -1 when nothing
+    * changed.
     */
   def mergeGeneral(spark: SparkSession, path: String, source: DataFrame,
       keys: Seq[String],
@@ -3432,134 +3160,34 @@ object DeltaLake {
       notMatched: Seq[MergeActions.NotMatchedInsert] = Seq.empty,
       notMatchedBySource: Seq[MergeActions.BySource] = Seq.empty,
       matchExtra: Option[org.apache.spark.sql.Column] = None,
-      thetaFullScan: Boolean = false): Long = {
+      thetaFullScan: Boolean = false): Long =
+    mergeGeneral(spark, path, replay(spark, path, None), source, keys,
+      matched, notMatched, notMatchedBySource, matchExtra, thetaFullScan)
+
+  private def mergeGeneral(spark: SparkSession, path: String,
+      st: LogState, source: DataFrame, keys: Seq[String],
+      matched: Seq[MergeActions.Matched],
+      notMatched: Seq[MergeActions.NotMatchedInsert],
+      notMatchedBySource: Seq[MergeActions.BySource],
+      matchExtra: Option[org.apache.spark.sql.Column],
+      thetaFullScan: Boolean): Long = {
     import MergeActions._
-    val st = replay(spark, path, None)
+    import org.apache.spark.sql.functions.when
     requireWritable(st, path, "mergeGeneral")
     requireNoRowContracts(st, path, "mergeGeneral",
       allowIdentity = true)
-    // THETA-ONLY ON (no key equality) is a documented NON-file-local
-    // fallback behind an explicit opt-in: the match probe, the
-    // cardinality check, and the rewrite all scan the FULL table (no
-    // hit-file locality to exploit), so the default stays the refusal
-    require(keys.nonEmpty || (thetaFullScan && matchExtra.isDefined),
-      "DeltaLake.mergeGeneral: empty key list — a pure theta ON has " +
-        "no file locality; pass thetaFullScan = true (with the theta " +
-        "condition as matchExtra) to accept the full-table rewrite")
-    require(keys.forall(st.schema.fieldNames.contains),
-      s"DeltaLake.mergeGeneral: keys $keys must be table columns")
     val ids = identityOf(st.schema)
-    val colDefaults = defaultsOf(st.schema)
-    validate("DeltaLake.mergeGeneral", st.schema, keys,
-      st.partitionColumns, matched, notMatched, notMatchedBySource,
-      autoCols = ids.keySet ++ colDefaults.keySet)
-    // identity columns are immutable — no SET may assign one
-    (matched.collect { case MatchedUpdate(_, Some(s)) => s } ++
-      notMatchedBySource.collect { case BySourceUpdate(_, s) => s })
-      .foreach(_.keys.foreach(c => require(!ids.contains(c),
-        s"DeltaLake.mergeGeneral: identity column '$c' is immutable " +
-          "— UPDATE SET may not assign it")))
-    require(st.partitionColumns.forall(keys.contains),
-      s"DeltaLake.mergeGeneral: partition columns " +
-        s"(${st.partitionColumns.mkString(",")}) must be merge keys — " +
-        "a non-key partition column would let a match move rows " +
-        "across partitions")
-    val srcCols = source.schema.fieldNames.toIndexedSeq
-    require(keys.forall(srcCols.contains),
-      s"DeltaLake.mergeGeneral: the source must carry the key " +
-        s"columns $keys — source: $srcCols")
-    val starNeeds = matched.exists {
-      case MatchedUpdate(_, None) => true
-      case _ => false
-    } || notMatched.exists(_.values.isEmpty)
-    // identity/defaulted columns are writer-computed: the source may
-    // omit them even under the star forms (INSERT * allocates/fills,
-    // SET * pins identity)
-    require(!starNeeds ||
-        st.schema.fieldNames
-          .filterNot(c => ids.contains(c) || colDefaults.contains(c))
-          .forall(srcCols.contains),
-      "DeltaLake.mergeGeneral: UPDATE SET * / INSERT * need the " +
-        s"source to carry every table column — table: " +
-        s"${st.schema.fieldNames.toSeq}, source: $srcCols")
-    // cast source columns the table knows to the table's types;
-    // source-only columns (condition inputs) pass through untouched
-    val src = source.select(srcCols.map { c =>
-      st.schema.find(_.name == c)
-        .map(f => col(c).cast(LakeScan.asNullable(f.dataType)).as(c))
-        .getOrElse(col(c))
-    }: _*).cache()
-    var pinned: Option[DataFrame] = None
-    try {
-      if (matched.nonEmpty && keys.nonEmpty) {
-        val keyPred = keys.map(k => col(k).isNotNull).reduce(_ && _)
-        require(src.filter(keyPred).groupBy(keys.map(col): _*).count()
-            .filter(col("count") > 1).isEmpty,
-          "DeltaLake.mergeGeneral: duplicate keys in the source — an " +
-            "ambiguous match is nondeterministic (the SQL " +
-            "cardinality violation)")
-      }
-      val target = readFiles(spark, path, st, st.adds, withMeta = true)
-      def pathsOf(df: DataFrame): Set[String] =
-        df.select(col("_metadata.file_path")).distinct()
-          .as[String](org.apache.spark.sql.Encoders.STRING)
-          .collect().map(metaPathToLocal).toSet
-      // the MATCH condition beyond key equality (`ON t.k = s.k AND
-      // <extra>`): scoped per MergeActions — target plain, source via
-      // src(). Every probe below pairs the plain-target frame with an
-      // all-__s_-renamed source frame, so ONE lowering serves all.
-      // A theta-only merge (keys empty, thetaFullScan) matches on the
-      // extra condition alone.
-      val sRenAll = src.select(
-        srcCols.map(c => col(c).as(s"$SrcPrefix$c")): _*)
-      val pairCond = (keys.map(k => col(k) === col(s"$SrcPrefix$k")) :+
-        matchExtra.getOrElse(lit(true))).reduce(_ && _)
-      if (matched.nonEmpty && keys.isEmpty) {
-        // theta cardinality: each target row must match at most ONE
-        // source row — compare the pair count with the matched-row
-        // count (two full joins: the documented cost of theta mode)
-        val t = readFiles(spark, path, st, st.adds)
-        require(t.join(sRenAll, pairCond).count() ==
-            t.join(sRenAll, pairCond, "left_semi").count(),
-          "DeltaLake.mergeGeneral: a target row matches more than " +
-            "one source row under the theta condition — an ambiguous " +
-            "match is nondeterministic (the SQL cardinality violation)")
-      }
-      val matchedPaths =
-        if (matched.isEmpty) Set.empty[String]
-        else pathsOf(target.join(sRenAll, pairCond, "left_semi"))
-      val bySourcePaths =
-        if (notMatchedBySource.isEmpty) Set.empty[String]
-        else {
-          val applies = notMatchedBySource
-            .map(_.cond.getOrElse(lit(true))).reduce(_ || _)
-          pathsOf(target.join(sRenAll, pairCond, "left_anti")
-            .filter(applies))
-        }
-      val hitPaths = matchedPaths ++ bySourcePaths
-      val hits = st.adds.filter(a =>
-        hitPaths.contains(new java.io.File(resolve(path, a.path))
-          .getAbsolutePath))
-      // NULL-key source rows match nothing → NOT MATCHED (inserted if
-      // an insert action applies; the anti join keeps them). A source
-      // row whose key matches but whose extra condition fails is NOT
-      // MATCHED too — the anti join carries the full pair condition.
+    RowLevelDml.merge("DeltaLake.mergeGeneral", dmlTable(spark, path, st),
+      source, keys, matched, notMatched, notMatchedBySource, matchExtra,
+      thetaFullScan, identity = ids.keySet,
+      defaults = defaultsOf(st.schema)) { plan =>
+      val hits = plan.hits
       val insertRows0 =
-        if (notMatched.isEmpty) spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          st.schema)
-        else MergeActions.resolveInserts(st.schema,
-          sRenAll.join(readFiles(spark, path, st, st.adds),
-            pairCond, "left_anti")
-            .select(srcCols.map(c =>
-              col(s"$SrcPrefix$c").as(c)): _*), notMatched,
-          defaults = colDefaults)
-      val insertRows1 =
-        if (ids.isEmpty || notMatched.isEmpty) insertRows0
+        if (ids.isEmpty || !plan.inserts) plan.insertRows
         else {
-          requireNoExplicitAlways(insertRows0, ids,
+          requireNoExplicitAlways(plan.insertRows, ids,
             "DeltaLake.mergeGeneral")
-          insertRows0.select(st.schema.toIndexedSeq.map { f =>
+          plan.insertRows.select(st.schema.toIndexedSeq.map { f =>
             ids.get(f.name) match {
               case Some(spec) =>
                 identityAlloc(spec, Some(col(f.name)), f.dataType)
@@ -3568,127 +3196,94 @@ object DeltaLake {
             }
           }: _*)
         }
-      // pin nondeterministic identity allocation across its consumers
-      // (row checks, data files, CDF change files) — see [[merge]]
-      val pinInserts = ids.nonEmpty && notMatched.nonEmpty &&
+      // identity allocation rides monotonically_increasing_id —
+      // NONDETERMINISTIC across executions — and insertRows feeds the
+      // row checks, the data-file landing, AND the CDF change files:
+      // unpinned, the change feed's insert rows could carry different
+      // surrogates than the landed data (the sink path persists for
+      // exactly this hazard). MEMORY_AND_DISK: one materialization,
+      // every consumer reads the same values.
+      val pinned = ids.nonEmpty && plan.inserts &&
         (cdfEnabled(st) || rowChecksOf(st).nonEmpty)
-      val insertRows =
-        if (pinInserts) { pinned = Some(insertRows1.persist())
-          insertRows1 }
-        else insertRows1
-      if (hits.isEmpty && insertRows.isEmpty) return -1L
-      val sRen = src.select(keys.map(col) ++
-        srcCols.map(c => col(c).as(s"$SrcPrefix$c")) :+
-        lit(true).as("__m"): _*)
-      import org.apache.spark.sql.functions.when
-      def joinedRefined =
-        if (matched.isEmpty) {
-          // by-source actions see only the target row, so only the
-          // match/no-match bit is needed — a semi/anti pair computes
-          // it without the left join, which would write target rows
-          // twice when the source carries duplicate keys (legal SQL
-          // here: only a matched UPDATE/DELETE with an ambiguous
-          // source is the cardinality violation)
-          val tgt = readFiles(spark, path, st, hits)
-          tgt.join(sRenAll, pairCond, "left_semi")
-            .withColumn("__m", lit(true))
-            .unionByName(tgt.join(sRenAll, pairCond, "left_anti")
-              .withColumn("__m", lit(null).cast("boolean")))
-        } else if (keys.isEmpty)
-          // theta: no equi-join to ride — the pair condition IS the
-          // join condition (cardinality pre-checked above, so the
-          // left join cannot fan out)
-          readFiles(spark, path, st, hits)
-            .join(sRenAll.withColumn("__m", lit(true)), pairCond,
-              "left")
-        else readFiles(spark, path, st, hits)
-          .join(sRen, keys.toSeq, "left")
-          // refine the match marker with the extra condition: a
-          // key-equal pair failing it is NOT matched (by-source scope)
-          .withColumn("__m", when(col("__m").isNotNull &&
-            matchExtra.getOrElse(lit(true)), lit(true)))
-      // GENERATED columns no SET assigns RECOMPUTE on update-outcome
-      // rows from the post-image (`__v_` values) — SET * included
-      // (the ALWAYS contract beats the source's copy); explicitly
-      // assigned ones keep the provided value, equality-validated
-      val genAssigned: Set[String] =
-        (matched.collect { case MatchedUpdate(_, Some(s)) => s.keySet } ++
-          notMatchedBySource.collect {
-            case BySourceUpdate(_, s) => s.keySet }).flatten.toSet
-      val genMG = generatedOf(st.schema).filterNot { case (g, _) =>
-        genAssigned.contains(g) || st.partitionColumns.contains(g) ||
-          ids.contains(g) }
-      def resolved = genMG.foldLeft(
-        MergeActions.resolveRows(st.schema, keys, joinedRefined,
-          matched, notMatchedBySource, pinned = ids.keySet)) {
-        case (df, (g, ge)) =>
-          df.withColumn(s"__v_$g",
-            when(col("__outcome") === "update",
-              genExprOver(ge, n => col(s"__v_$n"))
-                .cast(st.schema(g).dataType))
-              .otherwise(col(s"__v_$g")))
-      }
-      val origCols = st.schema.fieldNames.toIndexedSeq.map(col)
-      val newCols = st.schema.fieldNames.toIndexedSeq
-        .map(f => col(s"__v_$f").as(f))
-      def rewritten = resolved
-        .filter(!(col("__outcome") <=> "delete")).select(newCols: _*)
-      // row checks: rows an update produced + inserts must satisfy
-      // (deletes and untouched rows cannot violate)
-      locally {
-        val cs = rowChecksOf(st)
-        if (cs.nonEmpty) {
-          if (hits.nonEmpty) enforceConstraints(
-            resolved.filter(col("__outcome") === "update")
-              .select(newCols: _*), cs, path, "mergeGeneral")
-          if (!insertRows.isEmpty)
-            enforceConstraints(insertRows, cs, path, "mergeGeneral")
+      val insertRows = if (pinned) insertRows0.persist() else insertRows0
+      try {
+        // GENERATED columns no SET assigns RECOMPUTE on update-outcome
+        // rows from the post-image (`__v_` values) — SET * included
+        // (the ALWAYS contract beats the source's copy); explicitly
+        // assigned ones keep the provided value, equality-validated
+        val genAssigned: Set[String] =
+          (matched.collect { case MatchedUpdate(_, Some(s)) => s.keySet } ++
+            notMatchedBySource.collect {
+              case BySourceUpdate(_, s) => s.keySet }).flatten.toSet
+        val genMG = generatedOf(st.schema).filterNot { case (g, _) =>
+          genAssigned.contains(g) || st.partitionColumns.contains(g) ||
+            ids.contains(g) }
+        def resolved = genMG.foldLeft(plan.resolved) {
+          case (df, (g, ge)) =>
+            df.withColumn(s"__v_$g",
+              when(col("__outcome") === "update",
+                genExprOver(ge, n => col(s"__v_$n"))
+                  .cast(st.schema(g).dataType))
+                .otherwise(col(s"__v_$g")))
         }
-      }
-      val insertAdds =
-        if (insertRows.isEmpty) Seq.empty
-        else addFileActions(spark, path, insertRows,
-          st.partitionColumns)
-      val cdc =
-        if (!cdfEnabled(st)) Seq.empty
-        else {
-          val insCdc =
-            insertRows.withColumn("_change_type", lit("insert"))
-          if (hits.isEmpty)
-            cdcActions(spark, path, st, insCdc, st.version + 1)
-          else {
-            // cache the touched rows: pre/post/delete frames would
-            // otherwise re-run the hit-file scan + source join thrice
-            val touched = resolved
-              .filter(col("__outcome").isNotNull).persist()
-            try cdcActions(spark, path, st,
-              touched.filter(col("__outcome") === "update")
-                .select(origCols: _*)
-                .withColumn("_change_type", lit("update_preimage"))
-                .unionByName(touched
-                  .filter(col("__outcome") === "update")
-                  .select(newCols: _*)
-                  .withColumn("_change_type", lit("update_postimage")))
-                .unionByName(touched
-                  .filter(col("__outcome") === "delete")
-                  .select(origCols: _*)
-                  .withColumn("_change_type", lit("delete")))
-                .unionByName(insCdc),
-              st.version + 1)
-            finally { touched.unpersist(); () }
+        val origCols = st.schema.fieldNames.toIndexedSeq.map(col)
+        // row checks: rows an update produced + inserts must satisfy
+        // (deletes and untouched rows cannot violate)
+        locally {
+          val cs = rowChecksOf(st)
+          if (cs.nonEmpty) {
+            if (hits.nonEmpty) enforceConstraints(
+              resolved.filter(col("__outcome") === "update")
+                .select(plan.newCols: _*), cs, path, "mergeGeneral")
+            if (plan.inserts)
+              enforceConstraints(insertRows, cs, path, "mergeGeneral")
           }
         }
-      // allocated identity marks advance in the same commit (see the
-      // canonical merge) — a concurrent commit collides loudly
-      val idMeta = identityAdvanceOf(insertAdds, ids) match {
-        case nh if nh.isEmpty => Seq.empty
-        case nh => Seq(metaAction(path, withHighWater(st.schema, nh),
-          st.partitionColumns, st.configuration, st.tableId))
-      }
-      commitRewrite(spark, path, st, hits, rewritten, "MERGE",
-        insertAdds ++ cdc ++ idMeta)
-    } finally {
-      pinned.foreach(_.unpersist()); src.unpersist(); ()
+        val insertAdds =
+          if (!plan.inserts) Seq.empty
+          else addFileActions(spark, path, insertRows,
+            st.partitionColumns)
+        val cdc =
+          if (!cdfEnabled(st)) Seq.empty
+          else {
+            val insCdc =
+              insertRows.withColumn("_change_type", lit("insert"))
+            if (hits.isEmpty)
+              cdcActions(spark, path, st, insCdc, st.version + 1)
+            else {
+              // cache the touched rows: pre/post/delete frames would
+              // otherwise re-run the hit-file scan + source join thrice
+              val touched = resolved
+                .filter(col("__outcome").isNotNull).persist()
+              try cdcActions(spark, path, st,
+                touched.filter(col("__outcome") === "update")
+                  .select(origCols: _*)
+                  .withColumn("_change_type", lit("update_preimage"))
+                  .unionByName(touched
+                    .filter(col("__outcome") === "update")
+                    .select(plan.newCols: _*)
+                    .withColumn("_change_type", lit("update_postimage")))
+                  .unionByName(touched
+                    .filter(col("__outcome") === "delete")
+                    .select(origCols: _*)
+                    .withColumn("_change_type", lit("delete")))
+                  .unionByName(insCdc),
+                st.version + 1)
+              finally { touched.unpersist(); () }
+            }
+          }
+        // the allocated identity marks advance in the SAME commit's
+        // metaData (from the landed insert files' stats); a concurrent
+        // commit collides at the exclusive version link — loud, never a
+        // duplicate allocation
+        val idMeta = identityAdvanceOf(insertAdds, ids) match {
+          case nh if nh.isEmpty => Seq.empty
+          case nh => Seq(metaAction(path, withHighWater(st.schema, nh),
+            st.partitionColumns, st.configuration, st.tableId))
+        }
+        commitRewrite(spark, path, st, hits, plan.rewritten(resolved),
+          "MERGE", insertAdds ++ cdc ++ idMeta)
+      } finally { if (pinned) insertRows.unpersist(); () }
     }
   }
 
@@ -4324,22 +3919,28 @@ object DeltaLake {
     val pred = mapPredNames(
       org.apache.spark.sql.graft.GraftSql.predicateTree(predicate),
       st.physOf)
-    val candidates = st.adds.filter(a =>
-      mayMatch(pred, a.partitionValues, a.stats, st))
-    if (candidates.isEmpty) return Seq.empty
-    val hitPaths = readFiles(spark, path, st, candidates, withMeta = true)
-      .filter(predicate)
-      .select(col("_metadata.file_path")).distinct()
-      .as[String](org.apache.spark.sql.Encoders.STRING)
-      .collect().map(metaPathToLocal).toSet
-    candidates.filter(a => hitPaths.contains(
-      new java.io.File(resolve(path, a.path)).getAbsolutePath))
+    RowLevelDml.matchingFiles(dmlTable(spark, path, st),
+      st.adds.filter(a => mayMatch(pred, a.partitionValues, a.stats, st)),
+      predicate)
   }
+
+  /** `st` as the shared row-level DML planning reads it. */
+  private def dmlTable(spark: SparkSession, path: String,
+      st: LogState): RowLevelDml.Table[AddFile] =
+    new RowLevelDml.Table[AddFile] {
+      def schema: StructType = st.schema
+      def partitionColumns: Seq[String] = st.partitionColumns
+      def files: Seq[AddFile] = st.adds
+      def scan(files: Seq[AddFile], withMeta: Boolean): DataFrame =
+        readFiles(spark, path, st, files, withMeta)
+      def localPath(a: AddFile): String =
+        new java.io.File(resolve(path, a.path)).getAbsolutePath
+    }
 
   /** Land `rewritten` (the hit files' replacement rows) through the
     * table's partition layout and commit remove+add pairs (plus
     * `extraAdds`) as the next version — the shared copy-on-write tail
-    * of [[update]] and [[merge]]. All `dataChange=true`; pinned
+    * of [[update]] and [[mergeGeneral]]. All `dataChange=true`; pinned
     * version; exclusive commit.
     */
   private def commitRewrite(spark: SparkSession, path: String,

@@ -2941,8 +2941,8 @@ object Iceberg {
 
   /** PUBLIC ROW-LEVEL DELETE — the FORMAT-VERSION 3 deletion-vector
     * shape (one Puffin blob per hit file; superseded DVs removed
-    * in-commit; format version ratchets to 3): the second format's
-    * twin of [[DeltaLake.delete]]. Rows where the predicate is false
+    * in-commit; format version ratchets to 3), as [[DeltaLake.delete]]
+    * writes deletion vectors. Rows where the predicate is false
     * OR NULL survive. Returns the new snapshot id, or -1 when no live
     * row matched (no commit).
     *
@@ -2959,7 +2959,6 @@ object Iceberg {
     */
   def delete(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    import spark.implicits._
     val root = new java.io.File(tableDir)
     val cur = resolve(spark, tableDir, None)
     requireParquetData(cur, tableDir, "delete")
@@ -2970,29 +2969,13 @@ object Iceberg {
       cur.partitionColumns, f.partitionValues, f.stats) &&
       IcebergTransforms.mayMatch(pred, active, f.partitionValues))
     if (kept.isEmpty) return -1L
-    val perFile: Array[(String, Array[Byte])] =
-      scanOf(spark, tableDir, cur.copy(files = kept), withMeta = true)
-        .filter(predicate)
-        .select(org.apache.spark.sql.functions.col("_metadata.file_path"),
-          org.apache.spark.sql.functions.col("_metadata.row_index"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (p, it) =>
-          val bm = new DeletionVectors.Bitmap64
-          it.foreach(t => bm.add(t._2))
-          (p, bm.serialize())
-        }.collect()
+    val t = dmlTable(spark, tableDir, cur)
+    val perFile = RowLevelDml.deletedRows(t, kept, predicate)
     if (perFile.isEmpty) return -1L
-    val relByAbs = cur.files.map(f => new java.io.File(
-      resolveRef(tableDir, f.path)).getAbsolutePath -> f.path).toMap
     val (deadNow, priorDvs) = currentDeadSets(spark, tableDir, cur)
     // the new DV for a file = its COMPLETE dead set (spec writer rule)
-    val blobs = perFile.sortBy(_._1).toSeq.map { case (mp, bytes) =>
-      val abs = uriToLocal(mp)
-      val rel = relByAbs.getOrElse(abs, throw new IllegalStateException(
-        s"delete scan surfaced a file the snapshot does not list: $abs"))
-      val fresh = DeletionVectors.deserialize(bytes).toArray.toSeq
-      rel -> (deadNow(abs) ++ fresh).toSeq.sorted
+    val blobs = perFile.map { case (f, fresh) =>
+      f.path -> (deadNow(t.localPath(f)) ++ fresh.toArray).toSeq.sorted
     }
     val (_, version) = priorState(metadataDir(tableDir))
     // unique Puffin name: a retried delete after a lost race must not
@@ -3018,17 +3001,15 @@ object Iceberg {
       expectBase = Some(cur.snapshotId))
   }
 
-  /** PUBLIC ROW-LEVEL UPDATE — copy-on-write, the second format's twin
-    * of [[DeltaLake.update]]: every file holding a matching live row
-    * is removed and rewritten with `set` applied (OLD-row SQL
-    * semantics, one projection; NULL predicate = untouched), its
-    * deletion vector / positional / equality deletes MATERIALIZED —
-    * the rewritten file holds live rows only and its superseded DV is
-    * removed in the same snapshot. SET on a partition column refused
-    * (a move, not a rewrite); identity partitioning only (a
-    * transform-partitioned rewrite needs hidden-partition
-    * re-derivation — out of scope, loud). Returns the new snapshot
-    * id, or -1 when nothing matched.
+  /** PUBLIC ROW-LEVEL UPDATE — copy-on-write, as [[DeltaLake.update]]:
+    * every file holding a matching live row is removed and rewritten
+    * with `set` applied, its deletion vector / positional / equality
+    * deletes MATERIALIZED — the rewritten file holds live rows only and
+    * its superseded DV is removed in the same snapshot. SQL UPDATE
+    * semantics and the SET rules per [[RowLevelDml.updateSet]];
+    * identity partitioning only (a transform-partitioned rewrite needs
+    * hidden-partition re-derivation — out of scope, loud). Returns the
+    * new snapshot id, or -1 when nothing matched.
     *
     * Scale shape: bounds-pruned candidates → one distributed probe for
     * the files actually holding matches (driver sees paths only) →
@@ -3039,102 +3020,39 @@ object Iceberg {
   def update(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column,
       rawSet: Map[String, org.apache.spark.sql.Column]): Long = {
-    import org.apache.spark.sql.functions.{col, when}
-    import spark.implicits._
     val cur = resolve(spark, tableDir, None)
     requireParquetData(cur, tableDir, "update")
-    // SET keys resolve CASE-INSENSITIVELY like SQL (see the Delta
-    // twin); unknown names pass through to the data-column refusal
-    val set: Map[String, org.apache.spark.sql.Column] = {
-      val canonical = rawSet.toSeq.map { case (k, v) =>
-        (cur.schema.fieldNames.find(_.equalsIgnoreCase(k)).getOrElse(k),
-          k, v)
-      }
-      // case-colliding raw keys are a duplicate assignment — refuse,
-      // never silently last-wins (same policy as the Delta twin)
-      canonical.groupBy(_._1).foreach { case (c, ks) =>
-        require(ks.length == 1, s"Iceberg.update: duplicate SET " +
-          s"target '$c' (raw keys ${ks.map(_._2).mkString(", ")})")
-      }
-      canonical.map { case (c, _, v) => c -> v }.toMap
-    }
+    val t = dmlTable(spark, tableDir, cur)
+    val set = RowLevelDml.updateSet("Iceberg.update", t, rawSet)
     require(cur.transforms
         .forall(_.transform == IcebergTransforms.Identity),
       "Iceberg.update: copy-on-write rewrites of transform-partitioned " +
         "tables are not supported — the rewrite would need " +
         "hidden-partition re-derivation")
-    val dataCols = cur.schema.fieldNames.toSeq
-      .filterNot(cur.partitionColumns.contains)
-    require(set.nonEmpty, "Iceberg.update: empty SET")
-    // identity SET on a partition column tolerated (no-move no-op —
-    // the SQL bridge's all-identity lowering), same as the Delta twin
-    val set1 = {
-      val idPart = set.filter { case (c, e) =>
-        cur.partitionColumns.contains(c) && e.toString == col(c).toString
-      }
-      val rest = set -- idPart.keys
-      if (rest.nonEmpty || idPart.isEmpty) rest
-      else Map(dataCols.head -> col(dataCols.head))
-    }
-    require(set1.keySet.subsetOf(dataCols.toSet),
-      s"Iceberg.update: SET columns ${set1.keySet} must be data columns " +
-        "(updating a partition column is a move, not a rewrite) — " +
-        s"data columns: $dataCols")
     val pred = org.apache.spark.sql.graft.GraftSql.predicateTree(predicate)
-    val kept = cur.files.filter(f => StatsSkip.mayMatch(pred, cur.schema,
-      cur.partitionColumns, f.partitionValues, f.stats))
-    if (kept.isEmpty) return -1L
-    val hitPaths = scanOf(spark, tableDir, cur.copy(files = kept),
-      withMeta = true)
-      .filter(predicate)
-      .select(col("_metadata.file_path")).distinct()
-      .as[String].collect().map(uriToLocal).toSet
-    val hits = kept.filter(f => hitPaths.contains(new java.io.File(
-      resolveRef(tableDir, f.path)).getAbsolutePath))
+    val hits = RowLevelDml.matchingFiles(t,
+      cur.files.filter(f => StatsSkip.mayMatch(pred, cur.schema,
+        cur.partitionColumns, f.partitionValues, f.stats)), predicate)
     if (hits.isEmpty) return -1L
     // ONE distributed rewrite through the normal MoR path: DVs and
     // row-level deletes of the hit files materialize into live rows
-    val rewritten = scanOf(spark, tableDir, cur.copy(files = hits))
-      .select(cur.schema.fieldNames.toIndexedSeq.map { c =>
-        set1.get(c) match {
-          case Some(e) =>
-            when(predicate,
-              e.cast(LakeScan.asNullable(cur.schema(c).dataType)))
-              .otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }: _*)
+    val rewritten = t.scan(hits).select(cur.schema.fieldNames.toIndexedSeq
+      .map(c => RowLevelDml.setValue(t, predicate, set)(c).as(c)): _*)
     commitCow(spark, tableDir, cur, hits, rewritten, "upd")
   }
 
-  /** PUBLIC MERGE (upsert) — the second format's twin of
-    * [[DeltaLake.merge]]: `WHEN MATCHED THEN UPDATE SET * WHEN NOT
-    * MATCHED THEN INSERT *` in ONE snapshot. Matched target rows are
-    * REPLACED by their source row; unmatched source rows insert
-    * (unless `insertNotMatched=false`); NULL-key source rows match
-    * nothing and insert (SQL ON semantics); duplicate non-null source
-    * keys are refused (the cardinality violation). Partition columns
-    * must be merge keys (a match must not move rows across
-    * partitions); identity partitioning only. Returns the new
-    * snapshot id, or -1 when nothing would change. The rewrite reads
-    * ONLY hit files through the normal MoR path (deletes
-    * materialize); rewrite + inserts land in ONE distributed write.
+  /** PUBLIC MERGE (upsert) — `WHEN MATCHED THEN UPDATE SET * WHEN NOT
+    * MATCHED THEN INSERT *` in ONE snapshot, as [[DeltaLake.merge]]:
+    * [[mergeGeneral]] with `SET *` and `INSERT *` (no insert action when
+    * `insertNotMatched = false`). The source must carry every table
+    * column and the partition columns must be keys. Returns the new
+    * snapshot id, or -1 when nothing would change.
     */
   def merge(spark: SparkSession, tableDir: String, source: DataFrame,
       keys: Seq[String], insertNotMatched: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    import spark.implicits._
+    import MergeActions._
     val cur = resolve(spark, tableDir, None)
-    requireParquetData(cur, tableDir, "merge")
-    require(cur.transforms
-        .forall(_.transform == IcebergTransforms.Identity),
-      "Iceberg.merge: copy-on-write rewrites of transform-partitioned " +
-        "tables are not supported")
-    require(keys.nonEmpty, "Iceberg.merge: empty key list")
-    require(keys.forall(cur.schema.fieldNames.contains),
-      s"Iceberg.merge: keys $keys must be table columns")
-    require(cur.schema.fieldNames.forall(
-        source.schema.fieldNames.contains),
+    require(cur.schema.fieldNames.forall(source.schema.fieldNames.contains),
       "Iceberg.merge: the source must carry every table column " +
         s"(INSERT * needs them) — table: ${cur.schema.fieldNames.toSeq}, " +
         s"source: ${source.schema.fieldNames.toSeq}")
@@ -3143,58 +3061,22 @@ object Iceberg {
         s"(${cur.partitionColumns.mkString(",")}) must be merge keys — " +
         "a non-key partition column would let a match move rows " +
         "across partitions")
-    val src = source.select(cur.schema.map(f =>
-      col(f.name).cast(LakeScan.asNullable(f.dataType))
-        .as(f.name)): _*).cache()
-    try {
-      val keyPred = keys.map(k => col(k).isNotNull).reduce(_ && _)
-      require(src.filter(keyPred).groupBy(keys.map(col): _*).count()
-          .filter(col("count") > 1).isEmpty,
-        "Iceberg.merge: duplicate keys in the source — an ambiguous " +
-          "match is nondeterministic (the SQL cardinality violation)")
-      val target = scanOf(spark, tableDir, cur, withMeta = true)
-      val hitPaths = target.join(src, keys, "left_semi")
-        .select(col("_metadata.file_path")).distinct()
-        .as[String].collect().map(uriToLocal).toSet
-      val hits = cur.files.filter(f => hitPaths.contains(
-        new java.io.File(resolveRef(tableDir, f.path)).getAbsolutePath))
-      val inserts =
-        if (!insertNotMatched) src.limit(0)
-        else src.join(scanOf(spark, tableDir, cur)
-          .select(keys.map(col): _*), keys, "left_anti")
-      if (hits.isEmpty && inserts.isEmpty) return -1L
-      val nonKey = cur.schema.fieldNames.toSeq.filterNot(keys.contains)
-      val sRen = src.select(keys.map(col) ++
-        nonKey.map(c => col(c).as(s"__s_$c")) :+
-        lit(true).as("__m"): _*)
-      val insertRows = inserts.select(
-        cur.schema.fieldNames.toIndexedSeq.map(col): _*)
-      // rewrite + inserts in ONE distributed write (empty hit set →
-      // insert-only commit; the hit-file scan is never constructed)
-      val outRows =
-        if (hits.isEmpty) insertRows
-        else scanOf(spark, tableDir, cur.copy(files = hits))
-          .join(sRen, keys.toSeq, "left")
-          .select(cur.schema.fieldNames.toIndexedSeq.map { c =>
-            if (keys.contains(c)) col(c)
-            else when(col("__m").isNotNull, col(s"__s_$c"))
-              .otherwise(col(c)).as(c)
-          }: _*)
-          .unionByName(insertRows)
-      commitCow(spark, tableDir, cur, hits, outRows, "mrg")
-    } finally { src.unpersist(); () }
+    mergeGeneral(spark, tableDir, cur, source.select(cur.schema.fieldNames
+      .toIndexedSeq.map(org.apache.spark.sql.functions.col): _*), keys,
+      Seq(MatchedUpdate()),
+      if (insertNotMatched) Seq(NotMatchedInsert()) else Nil, Nil, None,
+      thetaFullScan = false)
   }
 
   /** GENERAL-FORM MERGE — the full SQL clause set (ordered
     * conditional `WHEN MATCHED` UPDATE/DELETE, conditional `WHEN NOT
     * MATCHED` inserts, `WHEN NOT MATCHED BY SOURCE` UPDATE/DELETE)
-    * over the copy-on-write writer; the Iceberg twin of
-    * [[DeltaLake.mergeGeneral]] — expression scopes, first-match
-    * ordering, and the key-equality ON contract per [[MergeActions]].
-    * Rewrites read ONLY the affected files (matched semi-join hits ∪
-    * by-source condition hits); duplicate source keys refused when
-    * matched actions exist. Returns the committed snapshot's version,
-    * or -1 when nothing changed.
+    * over the copy-on-write writer, as [[DeltaLake.mergeGeneral]]:
+    * expression scopes and first-match ordering per [[MergeActions]],
+    * the ON contract, hit files and cardinality rule per
+    * [[RowLevelDml.merge]]. The rewritten hit files and the inserts land
+    * in ONE distributed write; identity partitioning only. Returns the
+    * committed snapshot's version, or -1 when nothing changed.
     */
   def mergeGeneral(spark: SparkSession, tableDir: String,
       source: DataFrame, keys: Seq[String],
@@ -3202,139 +3084,50 @@ object Iceberg {
       notMatched: Seq[MergeActions.NotMatchedInsert] = Seq.empty,
       notMatchedBySource: Seq[MergeActions.BySource] = Seq.empty,
       matchExtra: Option[org.apache.spark.sql.Column] = None,
-      thetaFullScan: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    import spark.implicits._
-    import MergeActions._
-    val cur = resolve(spark, tableDir, None)
+      thetaFullScan: Boolean = false): Long =
+    mergeGeneral(spark, tableDir, resolve(spark, tableDir, None), source,
+      keys, matched, notMatched, notMatchedBySource, matchExtra,
+      thetaFullScan)
+
+  private def mergeGeneral(spark: SparkSession, tableDir: String,
+      cur: SnapshotMeta, source: DataFrame, keys: Seq[String],
+      matched: Seq[MergeActions.Matched],
+      notMatched: Seq[MergeActions.NotMatchedInsert],
+      notMatchedBySource: Seq[MergeActions.BySource],
+      matchExtra: Option[org.apache.spark.sql.Column],
+      thetaFullScan: Boolean): Long = {
     requireParquetData(cur, tableDir, "mergeGeneral")
     require(cur.transforms
         .forall(_.transform == IcebergTransforms.Identity),
       "Iceberg.mergeGeneral: copy-on-write rewrites of " +
         "transform-partitioned tables are not supported")
-    // theta-only ON behind an explicit opt-in — see the Delta twin
-    require(keys.nonEmpty || (thetaFullScan && matchExtra.isDefined),
-      "Iceberg.mergeGeneral: empty key list — a pure theta ON has " +
-        "no file locality; pass thetaFullScan = true (with the theta " +
-        "condition as matchExtra) to accept the full-table rewrite")
-    require(keys.forall(cur.schema.fieldNames.contains),
-      s"Iceberg.mergeGeneral: keys $keys must be table columns")
-    validate("Iceberg.mergeGeneral", cur.schema, keys,
-      cur.partitionColumns, matched, notMatched, notMatchedBySource)
-    require(cur.partitionColumns.forall(keys.contains),
-      s"Iceberg.mergeGeneral: partition columns " +
-        s"(${cur.partitionColumns.mkString(",")}) must be merge keys — " +
-        "a non-key partition column would let a match move rows " +
-        "across partitions")
-    val srcCols = source.schema.fieldNames.toIndexedSeq
-    require(keys.forall(srcCols.contains),
-      s"Iceberg.mergeGeneral: the source must carry the key columns " +
-        s"$keys — source: $srcCols")
-    val starNeeds = matched.exists {
-      case MatchedUpdate(_, None) => true
-      case _ => false
-    } || notMatched.exists(_.values.isEmpty)
-    require(!starNeeds ||
-        cur.schema.fieldNames.forall(srcCols.contains),
-      "Iceberg.mergeGeneral: UPDATE SET * / INSERT * need the source " +
-        s"to carry every table column — table: " +
-        s"${cur.schema.fieldNames.toSeq}, source: $srcCols")
-    val src = source.select(srcCols.map { c =>
-      cur.schema.find(_.name == c)
-        .map(f => col(c).cast(LakeScan.asNullable(f.dataType)).as(c))
-        .getOrElse(col(c))
-    }: _*).cache()
-    try {
-      if (matched.nonEmpty && keys.nonEmpty) {
-        val keyPred = keys.map(k => col(k).isNotNull).reduce(_ && _)
-        require(src.filter(keyPred).groupBy(keys.map(col): _*).count()
-            .filter(col("count") > 1).isEmpty,
-          "Iceberg.mergeGeneral: duplicate keys in the source — an " +
-            "ambiguous match is nondeterministic (the SQL " +
-            "cardinality violation)")
-      }
-      val target = scanOf(spark, tableDir, cur, withMeta = true)
-      def pathsOf(df: DataFrame): Set[String] =
-        df.select(col("_metadata.file_path")).distinct()
-          .as[String].collect().map(uriToLocal).toSet
-      // pair condition beyond key equality — see the Delta twin
-      val sRenAll = src.select(
-        srcCols.map(c => col(c).as(s"$SrcPrefix$c")): _*)
-      val pairCond = (keys.map(k => col(k) === col(s"$SrcPrefix$k")) :+
-        matchExtra.getOrElse(lit(true))).reduce(_ && _)
-      if (matched.nonEmpty && keys.isEmpty) {
-        // theta cardinality — see the Delta twin
-        val t = scanOf(spark, tableDir, cur)
-        require(t.join(sRenAll, pairCond).count() ==
-            t.join(sRenAll, pairCond, "left_semi").count(),
-          "Iceberg.mergeGeneral: a target row matches more than one " +
-            "source row under the theta condition — an ambiguous " +
-            "match is nondeterministic (the SQL cardinality violation)")
-      }
-      val matchedPaths =
-        if (matched.isEmpty) Set.empty[String]
-        else pathsOf(target.join(sRenAll, pairCond, "left_semi"))
-      val bySourcePaths =
-        if (notMatchedBySource.isEmpty) Set.empty[String]
-        else {
-          val applies = notMatchedBySource
-            .map(_.cond.getOrElse(lit(true))).reduce(_ || _)
-          pathsOf(target.join(sRenAll, pairCond, "left_anti")
-            .filter(applies))
-        }
-      val hitPaths = matchedPaths ++ bySourcePaths
-      val hits = cur.files.filter(f => hitPaths.contains(
-        new java.io.File(resolveRef(tableDir, f.path)).getAbsolutePath))
-      val insertRows =
-        if (notMatched.isEmpty) spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          cur.schema)
-        else MergeActions.resolveInserts(cur.schema,
-          sRenAll.join(scanOf(spark, tableDir, cur), pairCond,
-            "left_anti")
-            .select(srcCols.map(c =>
-              col(s"$SrcPrefix$c").as(c)): _*), notMatched)
-      if (hits.isEmpty && insertRows.isEmpty) return -1L
-      val sRen = src.select(keys.map(col) ++
-        srcCols.map(c => col(c).as(s"$SrcPrefix$c")) :+
-        lit(true).as("__m"): _*)
-      val newCols = cur.schema.fieldNames.toIndexedSeq
-        .map(f => col(s"__v_$f").as(f))
-      // see the Delta twin: with no matched actions the by-source
-      // scope only needs the match bit, and a semi/anti pair computes
-      // it without duplicating target rows under duplicate source keys
-      def joinedHits =
-        if (matched.isEmpty) {
-          val tgt = scanOf(spark, tableDir, cur.copy(files = hits))
-          tgt.join(sRenAll, pairCond, "left_semi")
-            .withColumn("__m", lit(true))
-            .unionByName(tgt.join(sRenAll, pairCond, "left_anti")
-              .withColumn("__m", lit(null).cast("boolean")))
-        } else if (keys.isEmpty)
-          // theta: the pair condition IS the join condition
-          // (cardinality pre-checked, so the left join cannot fan out)
-          scanOf(spark, tableDir, cur.copy(files = hits))
-            .join(sRenAll.withColumn("__m", lit(true)), pairCond,
-              "left")
-        else scanOf(spark, tableDir, cur.copy(files = hits))
-          .join(sRen, keys.toSeq, "left")
-          .withColumn("__m", when(col("__m").isNotNull &&
-            matchExtra.getOrElse(lit(true)), lit(true)))
+    RowLevelDml.merge("Iceberg.mergeGeneral",
+      dmlTable(spark, tableDir, cur), source, keys, matched, notMatched,
+      notMatchedBySource, matchExtra, thetaFullScan) { plan =>
       val outRows =
-        if (hits.isEmpty) insertRows
-        else MergeActions.resolveRows(cur.schema, keys,
-          joinedHits, matched, notMatchedBySource)
-          .filter(!(col("__outcome") <=> "delete"))
-          .select(newCols: _*)
-          .unionByName(insertRows)
-      commitCow(spark, tableDir, cur, hits, outRows, "mrg")
-    } finally { src.unpersist(); () }
+        if (plan.hits.isEmpty) plan.insertRows
+        else plan.rewritten(plan.resolved).unionByName(plan.insertRows)
+      commitCow(spark, tableDir, cur, plan.hits, outRows, "mrg")
+    }
   }
+
+  /** `cur` as the shared row-level DML planning reads it. */
+  private def dmlTable(spark: SparkSession, tableDir: String,
+      cur: SnapshotMeta): RowLevelDml.Table[IceFile] =
+    new RowLevelDml.Table[IceFile] {
+      def schema: StructType = cur.schema
+      def partitionColumns: Seq[String] = cur.partitionColumns
+      def files: Seq[IceFile] = cur.files
+      def scan(files: Seq[IceFile], withMeta: Boolean): DataFrame =
+        scanOf(spark, tableDir, cur.copy(files = files), withMeta)
+      def localPath(f: IceFile): String =
+        new java.io.File(resolveRef(tableDir, f.path)).getAbsolutePath
+    }
 
   /** Land `rows` through the table's identity-partition layout and
     * commit them with status=2 entries for `hits` (and their
     * deletion vectors — materialized by the rewrite) — the shared
-    * copy-on-write tail of [[update]] and [[merge]]. Exclusive
+    * copy-on-write tail of [[update]] and [[mergeGeneral]]. Exclusive
     * commit pinned to the resolved snapshot.
     */
   private def commitCow(spark: SparkSession, tableDir: String,
@@ -4082,15 +3875,6 @@ object Iceberg {
       new java.io.File(mdDir, "version-hint.text").toPath,
       version.toString)
     newSnapId
-  }
-
-  /** `_metadata.file_path`'s URL-encoded URI rendering back to the
-    * local absolute path the manifests resolve to (scheme optional,
-    * `%20` etc. decoded).
-    */
-  private def uriToLocal(p: String): String = {
-    val u = java.net.URI.create(p)
-    Option(u.getPath).filter(_.nonEmpty).getOrElse(p)
   }
 
   /** Sink-path metadata commit: content lands fully in a temp file,

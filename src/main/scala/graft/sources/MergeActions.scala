@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, when}
 import org.apache.spark.sql.types.StructType
 
-/** The GENERAL-FORM MERGE action model shared by
-  * [[DeltaLake.mergeGeneral]] and [[Iceberg.mergeGeneral]] — the full
-  * SQL `MERGE` clause set beyond the canonical upsert: ordered
+/** The MERGE action model of [[DeltaLake.mergeGeneral]] and
+  * [[Iceberg.mergeGeneral]] (planned by [[RowLevelDml.merge]]) — the
+  * full SQL `MERGE` clause set, the canonical upsert (`UPDATE SET *` +
+  * `INSERT *`, what both formats' `merge` run) included: ordered
   * conditional `WHEN MATCHED` actions (UPDATE with an explicit SET
   * list or `SET *`, and DELETE), conditional `WHEN NOT MATCHED …
   * INSERT` (explicit values or `INSERT *`), and `WHEN NOT MATCHED BY
@@ -70,8 +71,8 @@ object MergeActions {
   final case class BySourceDelete(cond: Option[Column] = None)
       extends BySource
 
-  /** Validate the clause families against the table shape. Shared by
-    * both writers so refusal texts match. `autoCols`: columns the
+  /** Validate the clause families against the table shape (for both
+    * formats, in [[RowLevelDml.merge]]). `autoCols`: columns the
     * writer computes or defaults (identity columns, columns with a
     * CURRENT_DEFAULT) — an INSERT may omit them.
     */
@@ -193,15 +194,11 @@ object MergeActions {
   /** Insert-side resolution over the anti-joined source rows (plain
     * source columns): first applicable insert action's values, rows
     * matching no action dropped. Returns rows in the table schema.
+    * `notMatched` is non-empty.
     */
   private[sources] def resolveInserts(schema: StructType,
       inserts: DataFrame, notMatched: Seq[NotMatchedInsert],
       defaults: Map[String, Column] = Map.empty): DataFrame = {
-    // empty frame in the TABLE schema — a key-only source frame may
-    // not carry every table column, so never select off `inserts` here
-    if (notMatched.isEmpty) return inserts.sparkSession.createDataFrame(
-      inserts.sparkSession.sparkContext
-        .emptyRDD[org.apache.spark.sql.Row], schema)
     def condOf(c: Option[Column]): Column = c.getOrElse(lit(true))
     val keep = notMatched.map(a => condOf(a.cond)).reduce(_ || _)
     val cols = schema.fieldNames.toIndexedSeq.map { f =>

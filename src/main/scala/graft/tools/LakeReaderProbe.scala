@@ -111,7 +111,7 @@ object LakeReaderProbe {
       // GENERAL-FORM MERGE locality (r15): a matched-DELETE takedown
       // with a KEY-ONLY source hitting a ~1% key range must rewrite
       // only the intersecting files — the general writer's semi-join
-      // hit set, like the canonical merge's
+      // hit set
       val lo2 = maxKey / 4
       val hi2 = lo2 + maxKey / 100
       val keptMrg = dl.snapshotWhere(spark, dml,

@@ -66,6 +66,81 @@ class MergeGeneralSpec extends AnyFunSuite with SparkFixture {
   private val scenarioBySource = Seq(
     BySourceUpdate(Some(col("id") <= 2), Map("v" -> lit(0.0))))
 
+  /** The canonical upsert (`UPDATE SET *` + `INSERT *`) run three ways
+    * over each input — the library `merge`, SQL `MERGE INTO` through a
+    * catalog, and `mergeGeneral` with the star actions — must leave
+    * equal table contents, or refuse alike (duplicate non-null keys).
+    * Inputs: NULL source keys (they insert), `insertNotMatched = false`,
+    * a zero-hit insert-only source, and a partitioned table.
+    */
+  private def canonicalUpserts(format: String,
+      write: (String, org.apache.spark.sql.DataFrame, Seq[String]) => Unit,
+      merge: (String, org.apache.spark.sql.DataFrame, Seq[String],
+        Boolean) => Long,
+      general: (String, org.apache.spark.sql.DataFrame, Seq[String],
+        Seq[NotMatchedInsert]) => Long,
+      read: String => org.apache.spark.sql.DataFrame): Unit = {
+    val wh = freshDir(s"canon_${format.takeRight(7)}")
+    spark.conf.set("spark.sql.catalog.mcan", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.mcan.warehouse", wh)
+    val nullKeys = Seq((Some(5L), 500.0), (None, 1.0), (None, 2.0),
+      (Some(42L), 4200.0)).toDF("id", "v")
+    val parted = (1L to 10L).map(i => (i, i % 2, i * 10.0))
+      .toDF("id", "pk", "v").coalesce(1)
+    val cases = Seq(
+      ("nullkeys", target, Seq.empty[String], nullKeys, true),
+      ("noinsert", target, Seq.empty[String], nullKeys, false),
+      ("insertonly", target, Seq.empty[String],
+        Seq((100L, 1.0), (101L, 2.0)).toDF("id", "v"), true),
+      ("parted", parted, Seq("pk"), Seq((3L, 1L, 30.5), (4L, 0L, 40.5),
+        (11L, 1L, 110.0)).toDF("id", "pk", "v"), true),
+      ("dupkeys", target, Seq.empty[String],
+        Seq((5L, 1.0), (5L, 2.0)).toDF("id", "v"), true))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    cases.foreach { case (name, tgt, partBy, src, insert) =>
+      val keys = "id" +: partBy
+      def fresh(route: String): String = {
+        val dir = new java.io.File(wh, s"${name}_$route").getAbsolutePath
+        write(dir, tgt, partBy)
+        dir
+      }
+      val routes: Seq[(String, String => Unit)] = Seq(
+        "merge" -> (dir => { merge(dir, src, keys, insert); () }),
+        "general" -> (dir => { general(dir, src, keys,
+          if (insert) Seq(NotMatchedInsert()) else Nil); () }),
+        "sql" -> (dir => {
+          GraftCatalog.register(spark, wh, s"db.${name}_sql", format,
+            s"${name}_sql")
+          src.createOrReplaceTempView(s"canon_src_$name")
+          spark.sql(s"MERGE INTO mcan.db.${name}_sql t USING " +
+            s"canon_src_$name s ON " +
+            keys.map(k => s"t.$k = s.$k").mkString(" AND ") +
+            " WHEN MATCHED THEN UPDATE SET *" +
+            (if (insert) " WHEN NOT MATCHED THEN INSERT *" else ""))
+          ()
+        }))
+      if (name == "dupkeys") routes.foreach { case (route, run) =>
+        val dir = fresh(route)
+        val e = intercept[Exception](run(dir))
+        assert(Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null)
+          .exists(x => String.valueOf(x.getMessage).contains("duplicate")),
+          s"$format $name via $route: $e")
+      } else {
+        val got = routes.map { case (route, run) =>
+          val dir = fresh(route)
+          run(dir)
+          route -> rows(read(dir))
+        }
+        got.tail.foreach { case (route, r) =>
+          assert(r == got.head._2,
+            s"$format $name: $route differs from merge")
+        }
+      }
+    }
+  }
+
   test("delta mergeGeneral: conditional matched update + matched " +
       "delete + conditional insert + by-source update, first-match " +
       "order") {
@@ -74,6 +149,12 @@ class MergeGeneralSpec extends AnyFunSuite with SparkFixture {
       DeltaLake.mergeGeneral(spark, dir, source, Seq("id"),
         scenarioMatched, scenarioInserts, scenarioBySource)
     }, dir => DeltaLake.snapshot(spark, dir), "delta")
+    canonicalUpserts("graft-deltalake",
+      (dir, df, p) => { DeltaLake.write(spark, dir, df, partitionBy = p); () },
+      (dir, src, keys, ins) => DeltaLake.merge(spark, dir, src, keys, ins),
+      (dir, src, keys, ins) => DeltaLake.mergeGeneral(spark, dir, src,
+        keys, Seq(MatchedUpdate()), ins),
+      dir => DeltaLake.snapshot(spark, dir))
   }
 
   test("iceberg mergeGeneral: the same scenario, same content") {
@@ -82,6 +163,12 @@ class MergeGeneralSpec extends AnyFunSuite with SparkFixture {
       Iceberg.mergeGeneral(spark, dir, source, Seq("id"),
         scenarioMatched, scenarioInserts, scenarioBySource)
     }, dir => Iceberg.snapshot(spark, dir), "ice")
+    canonicalUpserts("graft-iceberg",
+      (dir, df, p) => { Iceberg.write(spark, dir, df, partitionBy = p); () },
+      (dir, src, keys, ins) => Iceberg.merge(spark, dir, src, keys, ins),
+      (dir, src, keys, ins) => Iceberg.mergeGeneral(spark, dir, src,
+        keys, Seq(MatchedUpdate()), ins),
+      dir => Iceberg.snapshot(spark, dir))
   }
 
   test("first-match ordering: an earlier narrow action wins over a " +
