@@ -435,8 +435,7 @@ object Queries {
           case other => throw new IllegalStateException(
             s"delta_agg_join must route to the signed agg-join rung, got $other")
         }
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .select(col("o_custkey"), col("cnt"),
             col("sum_price").cast("double").as("sum_price"),
             col("c_custkey"), col("c_name"), col("sign"))
@@ -498,8 +497,7 @@ object Queries {
           case other => throw new IllegalStateException(
             s"delta_agg_agg must route to the signed agg-join rung, got $other")
         }
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .select(col("c_nationkey"), col("c_cnt"),
             col("c_bal").cast("double").as("c_bal"),
             col("s_nationkey"), col("s_cnt"), col("s_mx"), col("sign"))
@@ -565,8 +563,7 @@ object Queries {
           case other => throw new IllegalStateException(
             s"delta_two_level must route to the two-level rung, got $other")
         }
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .select(col("c_nationkey"), col("n_cust"), col("n_orders"),
             col("nation_spend").cast("double").as("nation_spend"),
             col("sign"))
@@ -636,8 +633,7 @@ object Queries {
           case other => throw new IllegalStateException(
             s"delta_minmax must route to the group-scoped rung, got $other")
         }
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .select(col("c_nationkey"),
             col("max_spend").cast("double").as("max_spend"),
             col("min_orders"), col("n_cust"), col("sign"))
@@ -706,8 +702,7 @@ object Queries {
             s"delta_group_distinct must route to the group-scoped rung, " +
               s"got $other")
         }
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .select(col("c_nationkey"), col("n_distinct_cnt"),
             col("n_repeat"), col("avg_spend"), col("sign"))
           .orderBy("c_nationkey", "sign")
@@ -864,8 +859,7 @@ object Queries {
           .select("o_orderkey", "o_custkey", "o_totalprice")
         val sd = Ivm.deltaLeftJoin(cust, big,
           col("c_custkey") === col("o_custkey"))
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .select("c_custkey", "c_name", "o_orderkey", "o_totalprice", "sign")
           .orderBy(col("c_custkey"), col("o_orderkey").asc_nulls_first,
             col("sign"))
@@ -905,9 +899,9 @@ object Queries {
     // oracle derives inserts/retracts independently as the two-directional
     // EXCEPT ALL of the windowed full/base views; running sums go through
     // DECIMAL so the interleaved accumulation is bit-exact in both engines.
-    // It is also the canary for exchange reuse: both nets are read in ONE
-    // query, the shape once reported to mis-evaluate with reuse on (see
-    // Ivm.SignedDelta.retracts for why the two nets never share one).
+    // The change is read as ONE net with a sign column
+    // (Ivm.SignedDelta.netWithSign); the reuse on/off check of queries
+    // reading both nets is DeltaIdentitySpec's.
     QueryDef("delta_keyscoped",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
@@ -920,8 +914,7 @@ object Queries {
         val ev = t(s, d, "events")
           .select("user_id", "event_id", "ts", "value")
         val sd = Ivm.deltaKeyScoped(q, ev, Seq("user_id"))
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .orderBy("user_id", "event_id", "sign")
       },
       Some("""WITH e AS (
@@ -1188,8 +1181,7 @@ object Queries {
           t(s, d, "customer").select("c_custkey"),
           t(s, d, "orders").filter(col("o_totalprice") > 300000)
             .select(col("o_custkey").as("c_custkey")))
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .orderBy("c_custkey", "sign")
       },
       Some("""WITH qfull AS (

@@ -1,7 +1,7 @@
 package graft.ivm
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions.{col, explode, lit, sequence, sum}
+import org.apache.spark.sql.functions.{abs, col, explode, lit, sequence, sum, when}
 import org.apache.spark.sql.graft.GraftSql
 
 /** Public API for incremental view maintenance (the reference's novel
@@ -151,6 +151,21 @@ object Ivm {
       * shared aggregate.
       */
     lazy val retracts: DataFrame = netPositive(weighted.withColumn(W, -col(W)))
+
+    /** The change netted ONCE: the output columns plus a non-null long
+      * `sign`, each row whose weights sum to a non-zero `Σw` repeated
+      * `|Σw|` times with the sign of `Σw`. One aggregate of the weighted
+      * frame, where reading [[inserts]] and [[retracts]] together runs
+      * two.
+      */
+    def netWithSign: DataFrame = {
+      val cols = weighted.columns.toSeq.filter(_ != W).map(col)
+      weighted.groupBy(cols: _*).agg(sum(col(W)).as(W))
+        .filter(col(W) =!= 0)
+        .withColumn("__graft_i", explode(sequence(lit(1L), abs(col(W)))))
+        .select(cols :+
+          when(col(W) > 0, lit(1L)).otherwise(lit(-1L)).as("sign"): _*)
+    }
 
     /** A δ-sized COVER of the change: a frame over a subset of the output
       * columns whose rows include every inserted or retracted row's

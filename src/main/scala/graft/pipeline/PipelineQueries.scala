@@ -290,8 +290,7 @@ object PipelineQueries {
             .select("event_id", "user_id", "p_event_id", "p_value")
         }
         val sd = Ivm.deltaKeyScoped(q, t(s, d, "events"), Seq("user_id"))
-        sd.inserts.withColumn("sign", lit(1L))
-          .unionByName(sd.retracts.withColumn("sign", lit(-1L)))
+        sd.netWithSign
           .orderBy("event_id", "sign")
       },
       Some("""WITH u AS (

@@ -81,8 +81,11 @@ class MergeGeneralSpec extends AnyFunSuite with SparkFixture {
         Seq[NotMatchedInsert]) => Long,
       read: String => org.apache.spark.sql.DataFrame): Unit = {
     val wh = freshDir(s"canon_${format.takeRight(7)}")
-    spark.conf.set("spark.sql.catalog.mcan", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.mcan.warehouse", wh)
+    // one catalog per format: a session caches a catalog plugin on first
+    // use, so a later warehouse setting would not reach it
+    val cat = s"mcan_${format.takeRight(7).replace("-", "")}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     val nullKeys = Seq((Some(5L), 500.0), (None, 1.0), (None, 2.0),
       (Some(42L), 4200.0)).toDF("id", "v")
     val parted = (1L to 10L).map(i => (i, i % 2, i * 10.0))
@@ -113,7 +116,7 @@ class MergeGeneralSpec extends AnyFunSuite with SparkFixture {
           GraftCatalog.register(spark, wh, s"db.${name}_sql", format,
             s"${name}_sql")
           src.createOrReplaceTempView(s"canon_src_$name")
-          spark.sql(s"MERGE INTO mcan.db.${name}_sql t USING " +
+          spark.sql(s"MERGE INTO $cat.db.${name}_sql t USING " +
             s"canon_src_$name s ON " +
             keys.map(k => s"t.$k = s.$k").mkString(" AND ") +
             " WHEN MATCHED THEN UPDATE SET *" +
