@@ -3060,7 +3060,14 @@ object DeltaLake {
     val t = dmlTable(spark, path, st)
     val set = RowLevelDml.updateSet("DeltaLake.update", t, rawSet,
       identity = identityOf(st.schema).keySet)
-    val hits = hitFiles(spark, path, st, predicate)
+    // stats-pruned candidates, then ONE distributed probe whose driver
+    // result is file paths only
+    val pred = mapPredNames(
+      org.apache.spark.sql.graft.GraftSql.predicateTree(predicate),
+      st.physOf)
+    val hits = RowLevelDml.matchingFiles(t,
+      st.adds.filter(a => mayMatch(pred, a.partitionValues, a.stats, st)),
+      predicate)
     if (hits.isEmpty) return -1L
     // GENERATED columns the SET does not assign RECOMPUTE on matched
     // rows (the reference recomputes when inputs change; unchanged
@@ -3119,18 +3126,13 @@ object DeltaLake {
       keys: Seq[String], insertNotMatched: Boolean = true): Long = {
     import MergeActions._
     val st = replay(spark, path, None)
-    require(st.schema.fieldNames.forall(source.schema.fieldNames.contains),
+    require(st.schema.fieldNames.forall(source.columns.contains),
       "DeltaLake.merge: the source must carry every table column " +
-        s"(INSERT * needs them) — table: ${st.schema.fieldNames.toSeq}, " +
-        s"source: ${source.schema.fieldNames.toSeq}")
-    require(st.partitionColumns.forall(keys.contains),
-      s"DeltaLake.merge: partition columns " +
-        s"(${st.partitionColumns.mkString(",")}) must be merge keys — " +
-        "a non-key partition column would let a match move rows " +
-        "across partitions")
-    mergeGeneral(spark, path, st,
-      source.select(st.schema.fieldNames.toIndexedSeq.map(col): _*), keys,
-      Seq(MatchedUpdate()),
+        s"${st.schema.fieldNames.toSeq}, got ${source.columns.toSeq}")
+    require(st.partitionColumns.forall(keys.contains), "DeltaLake.merge: " +
+      s"partition columns ${st.partitionColumns} must be merge keys")
+    val star = source.select(st.schema.fieldNames.toIndexedSeq.map(col): _*)
+    mergeGeneral(spark, path, st, star, keys, Seq(MatchedUpdate()),
       if (insertNotMatched) Seq(NotMatchedInsert()) else Nil, Nil, None,
       thetaFullScan = false)
   }
@@ -3908,20 +3910,6 @@ object DeltaLake {
     writeCommitExclusive(path, next,
       ictAction(ictConf, "RESTORE", path).toSeq ++ actions.toSeq)
     next
-  }
-
-  /** The files of `st` actually holding a row matching `predicate`:
-    * stats-pruned candidates, then ONE distributed probe whose driver
-    * result is file paths only.
-    */
-  private def hitFiles(spark: SparkSession, path: String, st: LogState,
-      predicate: org.apache.spark.sql.Column): Seq[AddFile] = {
-    val pred = mapPredNames(
-      org.apache.spark.sql.graft.GraftSql.predicateTree(predicate),
-      st.physOf)
-    RowLevelDml.matchingFiles(dmlTable(spark, path, st),
-      st.adds.filter(a => mayMatch(pred, a.partitionValues, a.stats, st)),
-      predicate)
   }
 
   /** `st` as the shared row-level DML planning reads it. */

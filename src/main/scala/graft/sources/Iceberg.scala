@@ -3052,18 +3052,14 @@ object Iceberg {
       keys: Seq[String], insertNotMatched: Boolean = true): Long = {
     import MergeActions._
     val cur = resolve(spark, tableDir, None)
-    require(cur.schema.fieldNames.forall(source.schema.fieldNames.contains),
+    require(cur.schema.fieldNames.forall(source.columns.contains),
       "Iceberg.merge: the source must carry every table column " +
-        s"(INSERT * needs them) — table: ${cur.schema.fieldNames.toSeq}, " +
-        s"source: ${source.schema.fieldNames.toSeq}")
-    require(cur.partitionColumns.forall(keys.contains),
-      s"Iceberg.merge: partition columns " +
-        s"(${cur.partitionColumns.mkString(",")}) must be merge keys — " +
-        "a non-key partition column would let a match move rows " +
-        "across partitions")
-    mergeGeneral(spark, tableDir, cur, source.select(cur.schema.fieldNames
-      .toIndexedSeq.map(org.apache.spark.sql.functions.col): _*), keys,
-      Seq(MatchedUpdate()),
+        s"${cur.schema.fieldNames.toSeq}, got ${source.columns.toSeq}")
+    require(cur.partitionColumns.forall(keys.contains), "Iceberg.merge: " +
+      s"partition columns ${cur.partitionColumns} must be merge keys")
+    val star =
+      source.select(cur.schema.fieldNames.toIndexedSeq.map(source.col): _*)
+    mergeGeneral(spark, tableDir, cur, star, keys, Seq(MatchedUpdate()),
       if (insertNotMatched) Seq(NotMatchedInsert()) else Nil, Nil, None,
       thetaFullScan = false)
   }
